@@ -152,7 +152,8 @@ def main() -> None:
     # comparisons stay apples-to-apples; extraction here is the
     # pipeline-tier fixture (~2k turns, pooled payloads -> genuine
     # duplicate extracted texts)
-    composed: dict[str, float] = {}
+    composed: dict[str, float | None] = {}
+    timed_out: list[str] = []
     from pdf_ocr_spark.dedup_extracted import (
         dedup_extracted_clusters, dedup_extracted_exact,
         dedup_extracted_neardup, semdedup_extracted,
@@ -203,8 +204,15 @@ def main() -> None:
                  .option("checkpointLocation",
                          os.path.join(workdir, f"ckpt_{sname}"))
                  .trigger(availableNow=True).start())
-            q.awaitTermination(600)
-            composed[sname] = round(time.time() - t0, 3)
+            try:
+                finished = q.awaitTermination(600)
+            finally:
+                q.stop()  # no-op once finished; the workdir goes next
+            if finished:
+                composed[sname] = round(time.time() - t0, 3)
+            else:  # a timeout is never recorded as a timing
+                composed[sname] = None
+                timed_out.append(sname)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -252,6 +260,7 @@ def main() -> None:
             "cpus": cpus,
         },
         "composed_dedup_extracted": composed,
+        "composed_timed_out": timed_out,
         "host_loadavg": {
             "start_1m": round(load_start[0], 2),
             "end_1m": round(os.getloadavg()[0], 2),

@@ -12,14 +12,11 @@ method[, paragraphs][, header][, footer][, error]}``.
 
 from __future__ import annotations
 
-import base64
+from dataclasses import replace
 
 from .config import DEFAULT, EngineConfig
-from .detector import detect_pdf
-from .kernels import binarize, denoise, deskew
-from .minipdf import MiniPdf
-from .ocr.engine import get_engine
-from .oracle import ref_process_page, ref_remove_headers_footers
+from .extract import _detect, page_rows
+from .minipdf.adapters import open_pdf
 
 
 def normalize_pages(pages: list | None, page_count: int) -> list:
@@ -49,14 +46,10 @@ def process_pdf_bytes(
 ) -> dict:
     """One document through the full reference task flow
     (api/ocr.py:68-318). Returns {"type", "pages", "combined"}."""
-    pdf = MiniPdf(data)
-    info = detect_pdf(pdf, threshold=cfg.pdf_text_threshold,
-                      sample_page_limit=cfg.detect_sample_page_limit,
-                      sample_head=cfg.detect_sample_head,
-                      sample_tail=cfg.detect_sample_tail)
+    pdf = open_pdf(data, backend=cfg.pdf_backend)
+    info = _detect(pdf, cfg)
     target = normalize_pages(pages, info.page_count)
-    dpi = dpi or cfg.default_dpi
-    dpi = max(cfg.min_dpi, min(cfg.max_dpi, dpi))
+    dpi = max(cfg.min_dpi, min(cfg.max_dpi, dpi or cfg.default_dpi))
 
     if info.pdf_type == "text":
         rows = [{"page": p, "text": pdf.extract_text(p),
@@ -64,52 +57,11 @@ def process_pdf_bytes(
         combined = "\n\n".join(r["text"] for r in rows)
         return {"type": "text", "pages": rows, "combined": combined}
 
-    # NOTE: this loop is the user-facing twin of oracle._extract_pdf's
-    # per-document path (same preprocess order, same deliberate
-    # patch-by-processed-index misalignment for mixed docs — a pinned
-    # reference quirk, oracle.py). A semantic change must land in both.
-    engine = get_engine()
-    rows = []
-    processed = []
-    image_set = set(info.image_pages)  # O(1) membership, O(P) lists
-    for p in target:
-        if p not in image_set:
-            rows.append({"page": p, "text": pdf.extract_text(p),
-                         "confidence": 1.0, "method": "extract"})
-            continue
-        try:
-            img = pdf.render_page(p, dpi=dpi)
-            if preprocess:
-                if do_denoise:
-                    img = denoise(img, method="gaussian")
-                if do_deskew:
-                    img, _ = deskew(img)
-                if do_binarize:
-                    img = binarize(img, method="otsu")
-        except Exception as e:
-            rows.append({"page": p, "text": "", "confidence": 0.0,
-                         "error": str(e)})
-            continue
-        res = engine.recognize(img, p)
-        page = ref_process_page(res, cfg, ignore_top, ignore_bottom,
-                                ignore_left, ignore_right)
-        processed.append(page)
-        rows.append({"page": p, "text": page.text,
-                     "confidence": res.avg_confidence,
-                     "paragraphs": [x.text for x in page.paragraphs],
-                     "method": "ocr"})
-
-    if cfg.remove_header_footer and processed:
-        final = ref_remove_headers_footers(
-            processed, cfg.header_footer_repeat_threshold)
-        for idx, page in enumerate(final):
-            if idx < len(rows):
-                rows[idx]["text"] = page.text
-                rows[idx]["paragraphs"] = [x.text for x in page.paragraphs]
-                if page.header:
-                    rows[idx]["header"] = page.header
-                if page.footer:
-                    rows[idx]["footer"] = page.footer
+    cfg = replace(cfg, preprocess_denoise=preprocess and do_denoise,
+                  preprocess_deskew=preprocess and do_deskew,
+                  preprocess_binarize=preprocess and do_binarize)
+    rows = page_rows(pdf, info, target, dpi, cfg,
+                     (ignore_top, ignore_bottom, ignore_left, ignore_right))
     # the docstring (and the reference, SURVEY.md S8) promise combined
     # text on EVERY path — the ocr path omitted it (review r4)
     combined = "\n\n".join(r["text"] for r in rows)

@@ -120,45 +120,28 @@ def with_searchable_pdf(df, cfg=None):
     cfg = cfg or DEFAULT
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .detector import decode_pdf_payload, detect_pdf
-        from .kernels import binarize, denoise, deskew
+        from .extract import _detect, _raster, decode_pdf_payload
         from .minipdf.adapters import open_pdf
         from .ocr.engine import get_engine
 
         engine = get_engine()
+        dpi = max(cfg.min_dpi, min(cfg.max_dpi, cfg.default_dpi))
         for batch in batches:
-            out = {"conv_id": [], "turn_idx": [], "searchable_pdf": []}
-            for conv_id, turn_idx, text in zip(
-                    batch["conv_id"].values, batch["turn_idx"].values,
-                    batch["text"].values):
+            blobs = []
+            for text in batch["text"].values:
                 try:
                     pdf = open_pdf(
                         decode_pdf_payload(text, cfg.max_payload_bytes),
                         backend=cfg.pdf_backend)
-                    info = detect_pdf(
-                        pdf, threshold=cfg.pdf_text_threshold,
-                        sample_page_limit=cfg.detect_sample_page_limit,
-                        sample_head=cfg.detect_sample_head,
-                        sample_tail=cfg.detect_sample_tail)
-                    dpi = max(cfg.min_dpi,
-                              min(cfg.max_dpi, cfg.default_dpi))
                     images, lines = [], []
-                    for p in info.image_pages:
-                        img = pdf.render_page(p, dpi=dpi)
-                        # SAME preprocess chain as the extraction path
-                        # (extract.py raster branch) so the overlay text
-                        # matches extracted_text for the same document
-                        # (code-review r3). Deviation from the reference
-                        # noted: searchable_pdf.py:57-66 overlays onto
-                        # the ORIGINAL page while OCR coords come from
-                        # the processed image; we embed the processed
-                        # raster so text and pixels stay aligned.
-                        if cfg.preprocess_denoise:
-                            img = denoise(img, method="gaussian")
-                        if cfg.preprocess_deskew:
-                            img, _ = deskew(img)
-                        if cfg.preprocess_binarize:
-                            img = binarize(img, method="otsu")
+                    for p in _detect(pdf, cfg).image_pages:
+                        # the extraction path's raster chain, so the
+                        # overlay text matches extracted_text. Deviation
+                        # from the reference: searchable_pdf.py:57-66
+                        # overlays onto the ORIGINAL page while OCR coords
+                        # come from the processed image; we embed the
+                        # processed raster so text and pixels stay aligned.
+                        img = _raster(pdf, p, dpi, cfg)
                         res = engine.recognize(img, p)
                         images.append(img)
                         lines.append([
@@ -168,10 +151,10 @@ def with_searchable_pdf(df, cfg=None):
                         if images else None
                 except Exception:
                     blob = None  # containment: bad payloads yield NULL
-                out["conv_id"].append(conv_id)
-                out["turn_idx"].append(turn_idx)
-                out["searchable_pdf"].append(blob)
-            yield pd.DataFrame(out)
+                blobs.append(blob)
+            yield pd.DataFrame({"conv_id": batch["conv_id"].values,
+                                "turn_idx": batch["turn_idx"].values,
+                                "searchable_pdf": blobs})
 
     return df.select("conv_id", "turn_idx", "text") \
         .mapInPandas(run, schema=SEARCHABLE_PDF_SCHEMA)

@@ -7,6 +7,10 @@ re-expressed over Arrow batches. Routing and geometry are vectorized
 which is the Arrow-batch analog of the reference's per-request loop — there
 is no per-row Python UDF dispatch anywhere.
 
+The page chain (``_raster``: render -> preprocess; ``page_rows``: OCR ->
+layout -> header/footer) is written once here; ``api.process_pdf_bytes``
+and ``export_pdf.with_searchable_pdf`` call it.
+
 Byte-equality contract: for every payload, ``extract_batch`` must produce the
 same (extracted_text, spans) as ``pdf_ocr_spark.oracle.extract_turn`` —
 enforced by tests/test_pipeline_equality.py.
@@ -125,6 +129,89 @@ def route_kinds(texts: pd.Series) -> pd.Series:
         index=texts.index)
 
 
+def _detect(pdf, cfg: EngineConfig):
+    """``detect_pdf`` with the config's threshold and sampling knobs."""
+    return detect_pdf(pdf, threshold=cfg.pdf_text_threshold,
+                      sample_page_limit=cfg.detect_sample_page_limit,
+                      sample_head=cfg.detect_sample_head,
+                      sample_tail=cfg.detect_sample_tail)
+
+
+def _raster(pdf, page_num: int, dpi: int, cfg: EngineConfig) -> np.ndarray:
+    """Render one page, then run the preprocess kernels ``cfg`` enables,
+    in the reference order (api/ocr.py:189-230): denoise, deskew,
+    binarize."""
+    img = pdf.render_page(page_num, dpi=dpi)
+    if cfg.preprocess_denoise:
+        img = denoise(img, method="gaussian")
+    if cfg.preprocess_deskew:
+        img, _ = deskew(img)
+    if cfg.preprocess_binarize:
+        img = binarize(img, method="otsu")
+    return img
+
+
+def page_rows(pdf, info, pages, dpi: int, cfg: EngineConfig,
+              margins: tuple = (0.0, 0.0, 0.0, 0.0)) -> list:
+    """The reference's per-page loop (api/ocr.py:163-282) over ``pages``
+    (0-based) of a non-text document -> ocr_result.json rows
+    ``{page, text, confidence[, paragraphs][, header][, footer]
+    [, error], method}``.
+
+    Pages outside ``info.image_pages`` are text-extracted. Image pages go
+    render -> preprocess -> OCR -> layout; a render/preprocess failure
+    becomes an error row with no ``method`` (per-page containment,
+    api/ocr.py:243-252), while an OCR failure propagates to the caller's
+    document-level containment. ``margins`` is (top, bottom, left,
+    right) in percent of the page."""
+    engine = get_engine()
+    image_pages = set(info.image_pages)
+    rows = []
+    processed = []
+    for page_num in pages:
+        if page_num not in image_pages:
+            rows.append({"page": page_num,
+                         "text": pdf.extract_text(page_num),
+                         "confidence": 1.0, "method": "extract"})
+            continue
+        try:
+            img = _raster(pdf, page_num, dpi, cfg)
+        except Exception as e:
+            rows.append({"page": page_num, "text": "", "confidence": 0.0,
+                         "error": str(e)})
+            continue
+        res = engine.recognize(img, page_num)
+        boxes = np.array([l.box for l in res.lines], dtype=float) \
+            if res.lines else np.empty((0, 4, 2))
+        confs = np.array([l.confidence for l in res.lines], dtype=float)
+        page = layout.process_page(
+            [l.text for l in res.lines], boxes, confs, page_num=page_num,
+            img_width=res.img_width, img_height=res.img_height,
+            ignore_top=margins[0], ignore_bottom=margins[1],
+            ignore_left=margins[2], ignore_right=margins[3],
+            spacing_threshold=cfg.paragraph_line_spacing_threshold,
+            column_aware=cfg.column_aware)
+        processed.append(page)
+        rows.append({"page": page_num, "text": page.text,
+                     "confidence": res.avg_confidence,
+                     "paragraphs": [p.text for p in page.paragraphs],
+                     "method": "ocr"})
+
+    if cfg.remove_header_footer and processed:
+        final_pages = layout.remove_headers_footers(
+            processed, cfg.header_footer_repeat_threshold)
+        # positional patch by processed index, faithfully misaligned for
+        # mixed docs (api/ocr.py:275-282)
+        for row, page in zip(rows, final_pages):
+            row["text"] = page.text
+            row["paragraphs"] = [p.text for p in page.paragraphs]
+            if page.header:
+                row["header"] = page.header
+            if page.footer:
+                row["footer"] = page.footer
+    return rows
+
+
 def _extract_pdf_doc(text: str, cfg: EngineConfig) -> tuple:
     """One PDF document -> (text, spans, method, conf, n_pages, error).
 
@@ -147,94 +234,34 @@ def _extract_pdf_doc_inner(text: str, cfg: EngineConfig) -> tuple:
                        backend=cfg.pdf_backend)
     except ValueError as e:
         return "", [], "error", 0.0, 0, str(e)
-    info = detect_pdf(pdf, threshold=cfg.pdf_text_threshold,
-                      sample_page_limit=cfg.detect_sample_page_limit,
-                      sample_head=cfg.detect_sample_head,
-                      sample_tail=cfg.detect_sample_tail)
-    dpi = max(cfg.min_dpi, min(cfg.max_dpi, cfg.default_dpi))
+    info = _detect(pdf, cfg)
 
     if info.pdf_type == "text":
         page_texts = [pdf.extract_text(p) for p in range(info.page_count)]
         return ("\n\n".join(page_texts), _spans(page_texts), "extract", 1.0,
                 info.page_count, None)
 
-    engine = get_engine()
-    image_pages = set(info.image_pages)
-    rows = []
-    processed = []
-    for page_num in range(info.page_count):
-        if page_num not in image_pages:
-            rows.append({"page": page_num,
-                         "text": pdf.extract_text(page_num),
-                         "confidence": 1.0})
-            continue
-        try:
-            img = pdf.render_page(page_num, dpi=dpi)
-            if cfg.preprocess_denoise:
-                img = denoise(img, method="gaussian")
-            if cfg.preprocess_deskew:
-                img, _ = deskew(img)
-            if cfg.preprocess_binarize:
-                img = binarize(img, method="otsu")
-        except Exception as e:
-            rows.append({"page": page_num, "text": "", "confidence": 0.0,
-                         "error": str(e)})
-            continue
-        res = engine.recognize(img, page_num)
-        texts = [l.text for l in res.lines]
-        boxes = np.array([l.box for l in res.lines], dtype=float) \
-            if res.lines else np.empty((0, 4, 2))
-        confs = np.array([l.confidence for l in res.lines], dtype=float)
-        page = layout.process_page(
-            texts, boxes, confs, page_num=page_num,
-            img_width=res.img_width, img_height=res.img_height,
-            spacing_threshold=cfg.paragraph_line_spacing_threshold,
-            column_aware=cfg.column_aware)
-        processed.append(page)
-        rows.append({"page": page_num, "text": page.text,
-                     "confidence": res.avg_confidence,
-                     "paragraphs": [p.text for p in page.paragraphs]})
-
-    if cfg.remove_header_footer and processed:
-        final_pages = layout.remove_headers_footers(
-            processed, cfg.header_footer_repeat_threshold)
-        # positional patch, faithfully misaligned for mixed docs
-        # (api/ocr.py:275-282)
-        for idx, page in enumerate(final_pages):
-            if idx < len(rows):
-                rows[idx]["text"] = page.text
-                rows[idx]["paragraphs"] = [p.text for p in page.paragraphs]
-
+    dpi = max(cfg.min_dpi, min(cfg.max_dpi, cfg.default_dpi))
+    rows = page_rows(pdf, info, range(info.page_count), dpi, cfg)
+    # assembly: export_simple semantics (txt_export.py:79-108)
     paragraphs: list[str] = []
     for row in rows:
         if "paragraphs" in row:
             paragraphs.extend(row["paragraphs"])
         else:
-            paragraphs.append(row.get("text", ""))
+            paragraphs.append(row["text"])
     conf = sum(r["confidence"] for r in rows) / len(rows) if rows else 0.0
     return ("\n\n".join(paragraphs), _spans(paragraphs), "ocr", conf,
             info.page_count, None)
-
-
-def _cached_pdf_extract(payload: str, cfg: EngineConfig,
-                        counters: dict | None):
-    """One cache-keyed decode — the SINGLE code path both the light
-    batch and the distinct-payload batch go through, so the two stages
-    cannot drift on cache keying or result-tuple shape (byte-equality
-    contract with oracle.extract_turn)."""
-    key = _pdf_cache_key(payload, cfg)
-    hit = _pdf_cache_get(key, counters)
-    if hit is None:
-        hit = _extract_pdf_doc(payload, cfg)
-        _pdf_cache_put(key, hit)
-    return hit
 
 
 def extract_payload_batch(texts: pd.Series, cfg: EngineConfig = DEFAULT,
                           counters: dict | None = None) -> pd.DataFrame:
     """Extract a batch of *distinct PDF payloads* (the dedup-before-decode
     pre-pass): one decode per unique payload cluster-wide. Returns the same
-    RESULT_COLUMNS frame as extract_batch."""
+    RESULT_COLUMNS frame as extract_batch, whose PDF turns also go
+    through here, so the two stages cannot drift on cache keying or
+    result shape."""
     n = len(texts)
     out = {c: np.empty(n, dtype=object) for c in
            ("extracted_text", "spans", "method", "error")}
@@ -244,7 +271,11 @@ def extract_payload_batch(texts: pd.Series, cfg: EngineConfig = DEFAULT,
     vals = texts.to_numpy(dtype=object)
     for i in range(n):
         t0 = time.perf_counter_ns()
-        hit = _cached_pdf_extract(vals[i], cfg, counters)
+        key = _pdf_cache_key(vals[i], cfg)
+        hit = _pdf_cache_get(key, counters)
+        if hit is None:
+            hit = _extract_pdf_doc(vals[i], cfg)
+            _pdf_cache_put(key, hit)
         text, spans, method, c, n_pages, err = hit
         out["extracted_text"][i] = text
         out["spans"][i] = list(spans)
@@ -325,17 +356,12 @@ def extract_batch(texts: pd.Series, cfg: EngineConfig = DEFAULT,
         out_us[i] = (time.perf_counter_ns() - t0) // 1000
 
     pdf_idx = np.nonzero(kind_arr == "pdf_b64")[0]
-    for i in pdf_idx:
-        t0 = time.perf_counter_ns()
-        hit = _cached_pdf_extract(vals[i], cfg, counters)
-        text, spans, method, conf, n_pages, err = hit
-        out_text[i] = text
-        out_spans[i] = list(spans)
-        out_method[i] = method
-        out_conf[i] = conf
-        out_pages[i] = n_pages
-        out_err[i] = err
-        out_us[i] = (time.perf_counter_ns() - t0) // 1000
+    if len(pdf_idx):
+        res = extract_payload_batch(texts.iloc[pdf_idx], cfg, counters)
+        for col, arr in zip(RESULT_COLUMNS, (
+                out_text, out_spans, out_method, out_conf, out_pages,
+                out_err, out_us)):
+            arr[pdf_idx] = res[col].to_numpy()
 
     return pd.DataFrame({
         "extracted_text": out_text,

@@ -8,51 +8,13 @@ correctness gate.
 
 from . import curation, dedup, queries, similarity, textstats
 
-# The driver's correctness gate checks the FIRST 50 registry entries.
-# Rounds 1-4 proved these entries green repeatedly (driver rows in
-# CORRECTNESS_r01..r04 plus the local oracle rehearsal and dedicated unit
-# tests), so they rotate to the BACK of the registry to pull the
-# driver-unchecked curation queries (VERDICT r4 "What's missing" #1) and
-# this round's new oracle queries inside the window. They remain fully
-# oracle-gated by tests/test_relational_oracle.py — only the driver's
-# 50-entry sampling order changes.
-_ROTATE_TO_BACK = [
-    "validate_payloads",     # green r1-r4
-    "content_md5",           # green r1-r4
-    "history_listing",       # green r1-r4
-    "ttl_cleanup",           # green r1-r4
-    "page_assembly",         # green r1-r4
-    "low_confidence",        # green r1-r4
-    "distinct_sorted_pages", # green r1-r4
-    "margin_filter",         # green r1-r4
-    "text_normalize",        # green r1-r4
-    "error_rate",            # green r1-r4
-    "coord_scale",           # green r1-r4
-    "top_tokens",            # green r1-r4
-    "sessionize",            # green r1-r4 (r5: makes window room for
-    #                          quality_classifier)
-    "header_footer_having",  # green r1-r4 (r5: room for ann_quantized)
-    "detect_sampling",       # green r1-r4 (r5: room for ann_pq)
-    "mean_of_means",         # green r1-r4 (r5: room for ann_ivf_pq)
-]
-
-
-def _ordered(pairs: dict) -> dict:
-    missing = [k for k in _ROTATE_TO_BACK if k not in pairs]
-    # fail loud on a renamed/misspelled entry: silently skipping it would
-    # quietly move the query back into the gate window (r5 review)
-    assert not missing, f"_ROTATE_TO_BACK entries not in registry: {missing}"
-    front = {k: v for k, v in pairs.items() if k not in _ROTATE_TO_BACK}
-    back = {k: pairs[k] for k in _ROTATE_TO_BACK}
-    return {**front, **back}
-
 
 def all_queries() -> dict:
     """name -> (spark_fn(spark, sf_dir) -> DataFrame)."""
     out = {}
     for mod in (queries, dedup, similarity, textstats, curation):
         out.update({k: v[0] for k, v in mod.QUERIES.items()})
-    return _ordered(out)
+    return out
 
 
 def all_oracle_sql() -> dict:
@@ -61,4 +23,4 @@ def all_oracle_sql() -> dict:
     for mod in (queries, dedup, similarity, textstats, curation):
         out.update({k: v[1] for k, v in mod.QUERIES.items()
                     if v[1] is not None})
-    return _ordered(out)
+    return out

@@ -143,14 +143,21 @@ def _duration_ms(spec: str) -> int:
     """Parse a Spark-style duration string — including the multi-unit
     and fractional forms withWatermark itself accepts ('1 hour
     30 minutes', '1.5 hours'): the same string feeds both parsers, so
-    this one must not be narrower (r5 review)."""
+    this one must not be narrower (r5 review). Raises ValueError for
+    anything else."""
     toks = spec.split()
     if not toks or len(toks) % 2:
         raise ValueError(f"bad duration: {spec!r}")
-    per = {"second": 1_000, "minute": 60_000, "hour": 3_600_000,
-           "day": 86_400_000}
-    return int(sum(float(n) * per[u.rstrip("s").lower()]
-                   for n, u in zip(toks[::2], toks[1::2])))
+    per = {"microsecond": 0.001, "millisecond": 1, "second": 1_000,
+           "minute": 60_000, "hour": 3_600_000, "day": 86_400_000,
+           "week": 604_800_000}
+    total = 0.0
+    for n, u in zip(toks[::2], toks[1::2]):
+        unit = per.get(u.rstrip("s").lower())
+        if unit is None:
+            raise ValueError(f"bad duration unit {u!r} in {spec!r}")
+        total += float(n) * unit
+    return int(total)
 
 
 def _row_minhash(n_hashes: int):

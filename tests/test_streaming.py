@@ -19,6 +19,20 @@ def stream_dirs(spark, unit_transcripts, tmp_path_factory):
     return {"base": str(base), "input": input_dir}
 
 
+def test_duration_ms_units_and_errors():
+    """The watermark horizon parser accepts the units withWatermark
+    accepts and raises ValueError (not KeyError) for anything else."""
+    from pdf_ocr_spark.streaming.jobs import _duration_ms
+    assert _duration_ms("1 hour 30 minutes") == 5_400_000
+    assert _duration_ms("1.5 hours") == 5_400_000
+    assert _duration_ms("250 milliseconds") == 250
+    assert _duration_ms("1500 microseconds") == 1
+    assert _duration_ms("2 weeks") == 1_209_600_000
+    for bad in ("", "10", "10 fortnights", "ten minutes"):
+        with pytest.raises(ValueError):
+            _duration_ms(bad)
+
+
 def test_stream_extraction_matches_batch(spark, unit_transcripts,
                                          stream_dirs):
     out = stream_dirs["base"] + "/out"
