@@ -17,7 +17,7 @@ from contextlib import redirect_stdout
 CHECKS = {
     "extraction_flagship": [
         "PushedFilters", "ReadSchema: struct<conv_id:string,turn_idx:int,"
-        "text:string>", "RoundRobinPartitioning"],
+        "text:string>", "RoundRobinPartitioning(8)"],
     "pdf_type_classify": ["HashAggregate"],
     "mean_of_means": ["BroadcastHashJoin"],
     "ann_cosine_topk": ["BroadcastNestedLoopJoin", "TakeOrderedAndProject"],
@@ -107,8 +107,9 @@ def main() -> None:
         "(c) the light path runs in the scan partitions, zero shuffles "
         "before the UDF; (d) dedup-before-decode with a round-robin "
         "repartition before the decode UDF (defeats AQE exchange-reuse "
-        "coalescing). Viral-attachment skew in the join-back is AQE's "
-        "job — broadcast when decoded results are small, "
+        "coalescing), one decode task per shuffle partition and never "
+        "fewer than the session's cores. Viral-attachment skew in the "
+        "join-back is AQE's job — broadcast when decoded results are small, "
         "SortMergeJoin(skew=true) partition splitting otherwise "
         "(asserted in tests/test_pipeline_skew.py; an explicit salted "
         "variant measured 15-35% slower in the common case and was "

@@ -8,7 +8,9 @@ with the IDENTICAL data-sized partitioning at both levels (a real cluster
 reading a fixed input gets its partition count from the data — bytes /
 maxPartitionBytes — not from the cluster size), and reporting throughput at
 both plus scaling efficiency (T_4N / T_N) / 4. Each level runs in a fresh
-JVM (subprocess) so executor pools don't leak between measurements.
+JVM (subprocess) so executor pools don't leak between measurements. The
+report goes to <out>/SCALING.md; the curated measurement history in
+BENCH/BASELINE.md is never rewritten.
 
 Usage: python jobs/scaling_bench.py [--convs 2000] [--n 2] [--parts 8]
        [--out BENCH]
@@ -96,12 +98,17 @@ def main() -> None:
                          "maxPartitionBytes) and the cluster size defines "
                          "only the parallelism; holding partitions-per-"
                          "core constant instead charges the 4N level 4x "
-                         "the per-task Python overhead (measured ~0.16 "
-                         "core-s per task, a PySpark local-mode platform "
-                         "floor reproduced with a trivial UDF on a bare "
-                         "session), which is a small-fixture artifact, "
-                         "not engine scaling. Default 8 -> ~34 decode "
-                         "tasks: >=4 waves on the 4N level")
+                         "the fixed per-task Python worker setup: "
+                         "~0.2-0.3 core-s a task, because PySpark's "
+                         "worker_util.setup_spark_files calls "
+                         "importlib.invalidate_caches() on every task and "
+                         "CPython 3.11/3.12 then re-reads the central "
+                         "directory of each of the 16 zipimporters cached "
+                         "for pyspark.zip, py4j and the spark-core jar "
+                         "(130-160 ms uncontended). The cost is the same "
+                         "on a cluster. The decode stage runs "
+                         "max(parts, cores) tasks: default 8 gives 8 at "
+                         "both levels while 4N <= 8")
     ap.add_argument("--pool", type=int, default=1024,
                     help="distinct PDF payloads in the fixture. Production "
                          "transcript tables have ~10-50x attachment reuse, "
@@ -136,9 +143,9 @@ def main() -> None:
     eff = (large["turns_per_sec"] / small["turns_per_sec"]) / 4.0
 
     os.makedirs(os.path.join(repo, args.out), exist_ok=True)
-    md = os.path.join(repo, args.out, "BASELINE.md")
+    md = os.path.join(repo, args.out, "SCALING.md")
     with open(md, "w") as f:
-        f.write(f"""# BENCH/BASELINE — measured scaling evidence
+        f.write(f"""# BENCH/SCALING — measured scaling evidence
 
 Identical extraction job, identical input ({small['rows']} turns,
 deterministic bench-tier transcripts fixture, seed 42), two parallelism
@@ -161,14 +168,18 @@ cluster size defines only the parallelism).
 - Both levels run in fresh JVMs with the Python worker pool pre-warmed
   through the same UDF (steady-state measurement; the reference amortizes
   its model load identically, SmartPDF-OCR app/ocr/engine.py:153-165).
-- Both levels run the IDENTICAL plan with the IDENTICAL task layout, so
-  the per-task Python overhead (measured ~0.16 core-s/task — a PySpark
-  local-mode platform floor that reproduces with a trivial passthrough
-  UDF on a bare un-tuned session, and with plain RDD maps) is paid
-  equally and cancels out of the ratio. The earlier partitions-per-core
-  methodology charged the 4N level 4x that fixed cost on a 16-s job —
-  a small-fixture artifact: at production scale tasks run minutes and
-  the floor vanishes.
+- Both levels run the IDENTICAL plan. The decode stage runs one task
+  per partition, never fewer than the cores: {max(args.parts, args.n)}
+  tasks at N and {max(args.parts, args.n * 4)} at 4N. Each Python task
+  pays a fixed worker setup of ~0.2-0.3 core-s: PySpark's
+  worker_util.setup_spark_files calls importlib.invalidate_caches() on
+  every task, and on CPython 3.11/3.12 each of the 16 zipimporters
+  cached for pyspark.zip, the py4j zip and the spark-core jar re-reads
+  its archive's central directory (130-160 ms uncontended). It
+  reproduces with a trivial mapInPandas or RDD mapPartitions and exists
+  on a cluster too. The work outside the decode stage (session-side
+  planning, pre-scan, write, lineage) does not shrink with cores, so it
+  bounds the ratio (Amdahl's law).
 - Platform per-core capacity is flat to 8 concurrent workers on this
   box (single-thread numpy probe: 23.8/26.0/27.8/26.3 it/s per task at
   1/2/4/8 concurrent — no turbo or DRAM penalty in this range),

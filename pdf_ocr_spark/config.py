@@ -7,7 +7,6 @@ reference has no analog for (partitioning, Arrow batch sizing, salting).
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 # reference MAX_UPLOAD_SIZE (app/config.py:87, enforced file_manager.py:60-96)
@@ -75,7 +74,3 @@ class EngineConfig:
 
 
 DEFAULT = EngineConfig()
-
-
-def shuffle_partitions_default() -> int:
-    return int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))

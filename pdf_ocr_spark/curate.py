@@ -81,7 +81,8 @@ def curate_corpus(extracted: DataFrame, *,
     the deterministic signed hashed-gram projection (embed.embed_docs)
     and turns with a lower-id cluster-mate at cosine >= the threshold
     are dropped — catching paraphrase-class near-dups whose word-3-gram
-    Jaccard is far below ``jaccard_threshold``. Runs on the (already
+    Jaccard is far below ``jaccard_threshold``. Docs that embed_docs
+    does not embed (zero-norm) are kept. Runs on the (already
     deduped) canonical set, so its within-cluster pair search sees the
     smallest possible input."""
     d = turns_as_docs(extracted)
@@ -97,10 +98,13 @@ def curate_corpus(extracted: DataFrame, *,
             embed_docs(canon.select("doc_id", "text"))
             .withColumnRenamed("doc_id", "vec_id"),
             semantic_n_cents, 2, semantic_threshold)
+        # drop only what SemDeDup marks keep = false: embed_docs omits
+        # zero-norm docs, and a doc it could not embed has no semantic
+        # duplicate, so it stays in the corpus
         canon = canon.join(
-            sem.filter(F.col("keep"))
+            sem.filter(~F.col("keep"))
             .select(F.col("vec_id").alias("doc_id")),
-            "doc_id", "left_semi")
+            "doc_id", "left_anti")
 
     n_tokens, _avg_tok, _punct, score = quality_cols("t_norm")
     base = (canon

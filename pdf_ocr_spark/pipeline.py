@@ -20,6 +20,11 @@ master URL):
     two exchanges, hash(ph) into the distinct aggregate and round-robin
     into the decode stage; light turns extract in their scan partitions;
     the final repartition by bucket moves extracted output only.
+  * decode tasks: one per shuffle partition, never fewer than the
+    session's cores (defaultParallelism). Each Python task pays a fixed
+    ~0.2-0.3 core-s of PySpark worker setup before the UDF runs, so
+    splitting the stage finer costs more setup than the straggler tail
+    it would trim.
   * skew: a conversation with 10^6 turns is split across buckets by the
     turn_idx//K salt term; a single fat PDF is bounded by the Arrow batch
     cap (arrow.maxRecordsPerBatch) so a batch holds at most that many
@@ -157,9 +162,9 @@ def build_result(df: DataFrame, cfg: EngineConfig,
     DISTINCT PDF payload exactly once cluster-wide makes total decode work
     independent of both duplication factor and executor count. Only the
     cheap route test runs per turn; payload bytes shuffle twice (hash(ph)
-    into the distinct aggregate, then round-robin into the decode
-    stage), and the join back carries hashes + extracted text, never the
-    payload.
+    into the distinct aggregate, then round-robin into
+    max(num_partitions, defaultParallelism) decode tasks), and the join
+    back carries hashes + extracted text, never the payload.
 
     # --- viral-attachment skew (VERDICT r1 #3) ---------------------------
     A payload referenced by 10^8 turns hashes every referring turn to one
@@ -199,10 +204,16 @@ def build_result(df: DataFrame, cfg: EngineConfig,
     # payloads -> 1 partition -> serial decode). AQE coalesces by bytes and
     # cannot see UDF CPU cost; an explicit round-robin repartition(n) is
     # preserved and spreads expensive decodes evenly.
-    # 4x more (smaller) decode tasks than other stages: payload decode
-    # cost is uneven (text vs raster flavors), and with task_size ~=
-    # stage_size/cores the straggler tail costs ~15% of the stage wall
-    # (measured util 0.86 -> ~0.95 with finer tasks)
+    # One decode task per shuffle partition, and at least one per session
+    # core. Every Python task pays ~0.2-0.3 core-s before the UDF runs:
+    # PySpark's worker calls importlib.invalidate_caches() in
+    # worker_util.setup_spark_files on every task, and on CPython 3.11/3.12
+    # each of the 16 zipimporters cached for pyspark.zip, the py4j zip and
+    # the spark-core jar (all on the worker PYTHONPATH) eagerly re-reads
+    # its archive's central directory: 130-160 ms a task uncontended,
+    # 222 ms median in reused workers. More, smaller tasks only multiply
+    # that fixed cost: at local[4] with 4x tasks, 3.5-4.3 of the 5.9-6.7
+    # decode executor-s went before UDF entry.
     #
     # The aggregation replaces dropDuplicates(ph) at identical shuffle
     # cost (same key, full text still shuffles once) and additionally
@@ -217,7 +228,8 @@ def build_result(df: DataFrame, cfg: EngineConfig,
              F.min(F.struct("conv_id", "turn_idx")).alias("fr"))
         .select("ph", "text", F.col("fr.conv_id").alias("first_conv"),
                 F.col("fr.turn_idx").alias("first_turn"))
-        .repartition(num_partitions * 4))
+        .repartition(max(num_partitions,
+                         df.sparkSession.sparkContext.defaultParallelism)))
     payload_results = distinct_payloads.mapInPandas(
         _make_payload_udf(cfg, counters), schema=PAYLOAD_SCHEMA)
     pdf_result = (

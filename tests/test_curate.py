@@ -169,6 +169,23 @@ def test_curate_semantic_stage_drops_paraphrase(spark):
     assert sem2 == got
 
 
+def test_curate_semantic_stage_keeps_unembedded_docs(spark, monkeypatch):
+    """A doc that embed_docs omits (it drops zero-norm vectors) has no
+    semantic duplicate: the semantic stage must keep it, not drop it
+    from the corpus because SemDeDup never saw it."""
+    import pdf_ocr_spark.embed as embed
+    ext = _frame(spark, [("cA", 0, BASE), ("cC", 0, GOOD2)])
+    gone = ext.select(F.xxhash64("conv_id", "turn_idx")).first()[0]
+    real = embed.embed_docs
+    monkeypatch.setattr(
+        embed, "embed_docs",
+        lambda d, *a, **k: real(d, *a, **k).filter(F.col("doc_id") != gone))
+    got = {(r["conv_id"], r["turn_idx"])
+           for r in curate_corpus(ext, semantic_threshold=0.5,
+                                  semantic_n_cents=1).collect()}
+    assert got == {("cA", 0), ("cC", 0)}
+
+
 def test_curate_count_mode_pretok_budgets_cjk(spark):
     """count_mode='pretok' budgets unspaced CJK by per-char tokens."""
     ext = spark.createDataFrame(
