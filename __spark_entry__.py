@@ -7,25 +7,9 @@ ops) for the driver's DuckDB side-by-side correctness gate.
 
 from __future__ import annotations
 
-import os
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def _fixture_path(tier: str = "unit") -> str:
-    """Deterministic transcripts fixture, generated once per machine
-    (cache keyed by FIXTURE_VERSION so content changes regenerate)."""
-    from pdf_ocr_spark.fixtures import FIXTURE_VERSION, generate_transcripts
-
-    cache = os.path.join(tempfile.gettempdir(), "pdf_ocr_spark_fixtures")
-    os.makedirs(cache, exist_ok=True)
-    path = os.path.join(
-        cache, f"transcripts_{tier}_v{FIXTURE_VERSION}.parquet")
-    if not os.path.exists(path):
-        generate_transcripts(path, tier=tier)
-    return path
 
 
 def _ship(spark: SparkSession) -> None:
@@ -41,6 +25,22 @@ def _ship(spark: SparkSession) -> None:
             raise
 
 
+def _extract(spark: SparkSession, tier: str,
+             num_partitions: int) -> DataFrame:
+    """The flagship extraction plan (pipeline.build_result: route,
+    dedup-before-decode, decode, join back, bucket) over a cached
+    transcripts fixture tier."""
+    _ship(spark)
+    from pdf_ocr_spark.config import DEFAULT
+    from pdf_ocr_spark.fixtures import cached_fixture
+    from pdf_ocr_spark.pipeline import build_result, with_bucket
+
+    df = spark.read.parquet(cached_fixture(tier)) \
+        .select("conv_id", "turn_idx", "text")
+    df = with_bucket(df, DEFAULT.num_buckets, DEFAULT.salt_turns_per_group)
+    return build_result(df, DEFAULT, num_partitions)
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the transcript-extraction pipeline end-to-end.
 
@@ -50,23 +50,11 @@ def entry(spark: SparkSession) -> DataFrame:
     relational sanity probe joining the sf0.001 testdata (documents) so the
     driver-provided tables are loaded too.
     """
-    _ship(spark)
     from pyspark.sql import functions as F
 
-    from pdf_ocr_spark.config import DEFAULT
-    from pdf_ocr_spark.pipeline import OUTPUT_SCHEMA, _make_extract_udf, \
-        with_bucket
-
-    df = spark.read.parquet(_fixture_path("unit")) \
-        .select("conv_id", "turn_idx", "text")
-    df = with_bucket(df, DEFAULT.num_buckets, DEFAULT.salt_turns_per_group)
-    result = (
-        df.repartition(8, F.col("bucket"))
-        .sortWithinPartitions("conv_id", "turn_idx")
-        .mapInPandas(_make_extract_udf(DEFAULT), schema=OUTPUT_SCHEMA)
-        .select("conv_id", "turn_idx", "extracted_text", "method",
-                "confidence", "n_pages")
-    )
+    result = _extract(spark, "unit", 8).select(
+        "conv_id", "turn_idx", "extracted_text", "method", "confidence",
+        "n_pages")
     # touch the driver's sf0.001 testdata as well (scan sanity)
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     n_docs = docs.count()
@@ -79,20 +67,8 @@ def _extract_transcripts_query(spark: SparkSession,
     fixture (20 turns, every route; non-SQL-expressible: render/OCR/
     layout inside the UDF). The composed dedup queries below use the
     bigger pipeline-tier fixture."""
-    _ship(spark)
-    from pyspark.sql import functions as F
-
-    from pdf_ocr_spark.config import DEFAULT
-    from pdf_ocr_spark.pipeline import OUTPUT_SCHEMA, _make_extract_udf, \
-        with_bucket
-
-    df = spark.read.parquet(_fixture_path("unit")) \
-        .select("conv_id", "turn_idx", "text")
-    df = with_bucket(df, DEFAULT.num_buckets, DEFAULT.salt_turns_per_group)
     return (
-        df.repartition(8, F.col("bucket"))
-        .sortWithinPartitions("conv_id", "turn_idx")
-        .mapInPandas(_make_extract_udf(DEFAULT), schema=OUTPUT_SCHEMA)
+        _extract(spark, "unit", 8)
         .select("conv_id", "turn_idx", "extracted_text", "method",
                 "confidence", "n_pages", "error")
         .orderBy("conv_id", "turn_idx")
@@ -107,33 +83,20 @@ def _extracted_frame(spark: SparkSession) -> DataFrame:
     payloads -> genuine duplicate extracted texts), localCheckpointed and
     cached per process so the composed dedup/semdedup/curate queries
     pay for extraction once."""
-    _ship(spark)
-    from pyspark.sql import functions as F
-
-    from pdf_ocr_spark.config import DEFAULT
-    from pdf_ocr_spark.pipeline import OUTPUT_SCHEMA, _make_extract_udf, \
-        with_bucket
-
-    path = _fixture_path("pipeline")
     # keyed by applicationId, not id(spark): CPython reuses object
     # addresses after GC, and a checkpointed frame bound to a stopped
     # context must never be handed to a fresh session
-    key = f"{spark.sparkContext.applicationId}:{path}"
+    app = spark.sparkContext.applicationId
+    key = f"{app}:pipeline"
     if key not in _EXTRACTED_CACHE:
         # evict entries of other (stopped) applications: a long-lived
         # driver looping sessions would otherwise pin one dead
         # DataFrame graph per applicationId forever
-        app = spark.sparkContext.applicationId
         for k in [k for k in _EXTRACTED_CACHE
                   if not k.startswith(f"{app}:")]:
             del _EXTRACTED_CACHE[k]
-        df = spark.read.parquet(path).select("conv_id", "turn_idx", "text")
-        df = with_bucket(df, DEFAULT.num_buckets,
-                         DEFAULT.salt_turns_per_group)
         _EXTRACTED_CACHE[key] = (
-            df.repartition(16, F.col("bucket"))
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .mapInPandas(_make_extract_udf(DEFAULT), schema=OUTPUT_SCHEMA)
+            _extract(spark, "pipeline", 16)
             .select("conv_id", "turn_idx", "extracted_text", "method")
             .localCheckpoint(eager=True))
     return _EXTRACTED_CACHE[key]

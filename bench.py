@@ -50,17 +50,14 @@ HEADLINE_QUERIES = [
     "ann_quantized", "ann_pq", "ann_ivf_pq",
 ]
 
-
-def _bench_fixture(n_convs: int) -> str:
-    from pdf_ocr_spark.fixtures import FIXTURE_VERSION, generate_transcripts
-
-    cache = os.path.join(tempfile.gettempdir(), "pdf_ocr_spark_fixtures")
-    os.makedirs(cache, exist_ok=True)
-    path = os.path.join(
-        cache, f"transcripts_bench_v{FIXTURE_VERSION}_{n_convs}.parquet")
-    if not os.path.exists(path):
-        generate_transcripts(path, tier="bench", n_convs=n_convs)
-    return path
+# the relational queries of BENCH_r03.json, the suite that
+# value_r3_comparable_suite sums
+R3_SUITE = frozenset({
+    "ann_cosine_topk", "dedup_minhash_lsh", "dedup_simhash",
+    "detect_sampling", "doc_fingerprint", "knn_label_vote", "mean_of_means",
+    "page_assembly", "pdf_type_classify", "quality_score", "reading_order",
+    "token_count",
+})
 
 
 def main() -> None:
@@ -75,6 +72,7 @@ def main() -> None:
     except ValueError:
         sf = 0.0
 
+    from pdf_ocr_spark.fixtures import cached_fixture
     from pdf_ocr_spark.pipeline import run_extraction
     from pdf_ocr_spark.relational import all_queries
     from pdf_ocr_spark.session import build_session
@@ -103,7 +101,7 @@ def main() -> None:
     # context, so trial 2 re-decodes everything and the minimum is the
     # least-interference run, not a warm-cache run (same fresh-process
     # methodology as jobs/scaling_bench.py).
-    fixture = _bench_fixture(n_convs)
+    fixture = cached_fixture("bench", n_convs=n_convs)
     metrics, best_wall = None, None
     for trial in range(2):
         spark = build_session("pdf-ocr-spark-bench", cores=cpus,
@@ -158,14 +156,7 @@ def main() -> None:
         dedup_extracted_clusters, dedup_extracted_exact,
         dedup_extracted_neardup, semdedup_extracted,
     )
-    from pdf_ocr_spark.fixtures import FIXTURE_VERSION, \
-        generate_transcripts
-    pfix = os.path.join(
-        tempfile.gettempdir(), "pdf_ocr_spark_fixtures",
-        f"transcripts_pipeline_v{FIXTURE_VERSION}.parquet")
-    if not os.path.exists(pfix):
-        os.makedirs(os.path.dirname(pfix), exist_ok=True)
-        generate_transcripts(pfix, tier="pipeline")
+    pfix = cached_fixture("pipeline")
     workdir = tempfile.mkdtemp(prefix="bench_composed_")
     try:
         t0 = time.time()
@@ -219,27 +210,19 @@ def main() -> None:
     spark.stop()
 
     total = round(sum(timings.values()), 3)
-    # like-for-like subtotal over the r3-era suite (the r4 headline
-    # grew by the 14 ops listed below, so `value` is not comparable to
-    # BENCH_r03)
-    r4_added = {"dedup_ngram_jaccard", "dedup_simhash_hamming",
-                "dedup_clusters", "contamination_check",
-                "repetition_stats", "line_dedup", "semdedup",
-                "substring_dedup", "bm25_topk", "lm_perplexity",
-                "dsir_weights", "corpus_similarity", "tfidf_top_terms",
-                "cardinality_estimate", "lm_perplexity_bigram",
-                # r5 additions excluded from the r3-comparable subtotal too
-                "token_count_pretok", "corpus_pack_pretok",
-                "url_stats", "quality_classifier", "ann_quantized", "ann_pq",
-                "ann_ivf_pq"}
-    # same STATISTIC as the r3 artifact, not just the same query set:
+    # like-for-like subtotal over the r3 suite (BENCH_r03.json), null
+    # unless every one of its queries ran: a partial sum under the
+    # "comparable" label would read as a speedup.
+    # Same STATISTIC as the r3 artifact, not just the same query set:
     # r3 recorded one-shot query timings, so the comparable subtotal
     # sums each query's FIRST trial (min-of-2 would read as a speedup
     # that is partly methodology — r5 review); extraction stays
     # best-of-2, as it was in r3/r4
-    comparable = round(
-        timings["extract_transcripts"]
-        + sum(query_trials[k][0] for k in names if k not in r4_added), 3)
+    comparable = None
+    if R3_SUITE <= query_trials.keys():
+        comparable = round(
+            timings["extract_transcripts"]
+            + sum(query_trials[k][0] for k in R3_SUITE), 3)
     print(json.dumps({
         "metric": "headline wall time (extraction + relational suite)",
         "value": total,

@@ -67,10 +67,8 @@ def main() -> None:
     sys.path.insert(0, repo)
     from pdf_ocr_spark.session import build_session
     from pdf_ocr_spark.relational import all_queries
-    from pdf_ocr_spark.pipeline import (OUTPUT_SCHEMA, _make_extract_udf,
-                                        with_bucket)
+    from pdf_ocr_spark.pipeline import with_bucket
     from pdf_ocr_spark.config import DEFAULT
-    from pyspark.sql import functions as F
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     spark = build_session("explain", cores=2, shuffle_partitions=8)
@@ -88,13 +86,8 @@ def main() -> None:
 
     # the REAL flagship plan (build_result), not a hand-built analog
     from pdf_ocr_spark.pipeline import build_result
-    from pdf_ocr_spark.fixtures import FIXTURE_VERSION, generate_transcripts
-    fixture = os.path.join(
-        os.path.join(tempfile.gettempdir(), "pdf_ocr_spark_fixtures"),
-        f"transcripts_unit_v{FIXTURE_VERSION}.parquet")
-    if not os.path.exists(fixture):
-        os.makedirs(os.path.dirname(fixture), exist_ok=True)
-        generate_transcripts(fixture, tier="unit")
+    from pdf_ocr_spark.fixtures import cached_fixture
+    fixture = cached_fixture("unit")
     df = spark.read.parquet(fixture).select("conv_id", "turn_idx", "text")
     result = build_result(with_bucket(df, 64, 64), DEFAULT, 8)
     capture(

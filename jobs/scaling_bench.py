@@ -23,12 +23,12 @@ import json
 import os
 import subprocess
 import sys
-import tempfile
 
 _RUN_ONE = r"""
 import json, os, shutil, sys, tempfile, time
 sys.path.insert(0, {repo!r})
 from pdf_ocr_spark.session import build_session
+from pdf_ocr_spark.fixtures import generate_transcripts
 from pdf_ocr_spark.pipeline import run_extraction
 
 cores, parts = {cores}, {parts}
@@ -39,26 +39,31 @@ spark.sparkContext.setLogLevel("ERROR")
 workdir = tempfile.mkdtemp(prefix="scale_")
 try:
     # warm the JVM AND the Python worker pool (imports + engine build)
-    # with a tiny pass through the same UDF, so the measured run is
-    # steady-state (the reference amortizes model load the same way,
-    # SmartPDF-OCR app/ocr/engine.py:153-165)
-    from pdf_ocr_spark.pipeline import (_make_extract_udf, with_bucket,
-                                        OUTPUT_SCHEMA)
-    from pdf_ocr_spark.config import DEFAULT
-    warm = with_bucket(
-        spark.read.parquet(fixture).limit(256)
-        .select("conv_id", "turn_idx", "text"), 64, 64)
-    warm.repartition(cores).mapInPandas(
-        _make_extract_udf(DEFAULT), schema=OUTPUT_SCHEMA).count()
+    # with one small pass through the same flagship job, so the measured
+    # run is steady-state (the reference amortizes model load the same
+    # way, SmartPDF-OCR app/ocr/engine.py:153-165). The warm-up input is
+    # the unit tier under another seed: the timed run never sees its
+    # payloads, so the per-worker payload cache cannot serve any of them
+    warm = os.path.join(workdir, "warm.parquet")
+    generate_transcripts(warm, tier="unit", seed=7)
+    run_extraction(spark, warm, os.path.join(workdir, "warm_out"),
+                   os.path.join(workdir, "warm_lin"), run_id="warm",
+                   num_buckets=64, num_partitions=parts, resume=False)
     t0 = time.time()
     m = run_extraction(
         spark, fixture, os.path.join(workdir, "out"),
         os.path.join(workdir, "lin"), run_id=f"scale-{{cores}}",
         num_buckets=64, num_partitions=parts, resume=False)
     wall = time.time() - t0
+    hits = m["payload_cache_hits"]
     print(json.dumps({{"cores": cores, "rows": m["rows_out"],
                        "wall_s": wall,
-                       "turns_per_sec": m["rows_out"] / wall}}))
+                       "turns_per_sec": m["rows_out"] / wall,
+                       "payload_cache_hits": hits}}))
+    # a cache hit skips a decode the other level may pay for: the two
+    # levels would no longer do the same work
+    if hits:
+        sys.exit(f"timed run served {{hits}} payloads from the cache")
 finally:
     shutil.rmtree(workdir, ignore_errors=True)
     spark.stop()
@@ -75,7 +80,9 @@ def run_level(repo: str, fixture: str, cores: int, parts: int,
         code = _RUN_ONE.format(repo=repo, cores=cores, parts=parts,
                                fixture=fixture)
         out = subprocess.run([sys.executable, "-c", code],
-                             capture_output=True, text=True, check=True)
+                             capture_output=True, text=True)
+        if out.returncode:
+            raise SystemExit(f"local[{cores}] failed:\n{out.stderr[-2000:]}")
         m = json.loads(out.stdout.strip().splitlines()[-1])
         if best is None or m["wall_s"] < best["wall_s"]:
             best = m
@@ -120,23 +127,11 @@ def main() -> None:
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
-    from pdf_ocr_spark.fixtures import FIXTURE_VERSION, \
-        generate_transcripts
+    from pdf_ocr_spark.fixtures import cached_fixture
 
-    cache = os.path.join(tempfile.gettempdir(), "pdf_ocr_spark_fixtures")
-    os.makedirs(cache, exist_ok=True)
-    # FIXTURE_VERSION in the cache key: a fixture content change must
-    # regenerate this file like every other cached fixture, or the
-    # published scaling number silently measures stale data (review r4)
-    fixture = os.path.join(
-        cache,
-        f"transcripts_scale_v{FIXTURE_VERSION}"
-        f"_{args.convs}_{args.pool}.parquet")
-    if not os.path.exists(fixture):
-        n = generate_transcripts(fixture, tier="bench", n_convs=args.convs,
-                                 n_pdf_pool=args.pool,
-                                 n_html_pool=args.pool // 8)
-        print(f"generated scale fixture: {n} turns", file=sys.stderr)
+    fixture = cached_fixture("bench", n_convs=args.convs,
+                             n_pdf_pool=args.pool,
+                             n_html_pool=args.pool // 8)
 
     small = run_level(repo, fixture, args.n, args.parts, args.repeats)
     large = run_level(repo, fixture, args.n * 4, args.parts, args.repeats)
@@ -166,8 +161,13 @@ cluster size defines only the parallelism).
 ## Measurement notes
 
 - Both levels run in fresh JVMs with the Python worker pool pre-warmed
-  through the same UDF (steady-state measurement; the reference amortizes
-  its model load identically, SmartPDF-OCR app/ocr/engine.py:153-165).
+  by one run of the same job on a small input of its own (unit tier,
+  seed 7; steady-state measurement, the reference amortizes its model
+  load identically, SmartPDF-OCR app/ocr/engine.py:153-165). The timed
+  run never sees the warm-up's payloads, and a level fails unless its
+  timed run served 0 payloads from the per-worker cache (timed runs:
+  {small['payload_cache_hits']} hits at N, {large['payload_cache_hits']}
+  at 4N), so both levels decode every distinct payload.
 - Both levels run the IDENTICAL plan. The decode stage runs one task
   per partition, never fewer than the cores: {max(args.parts, args.n)}
   tasks at N and {max(args.parts, args.n * 4)} at 4N. Each Python task

@@ -39,14 +39,18 @@ RESULT_COLUMNS = [
 
 # Per-worker-process payload-dedup cache (identical attachments recur in
 # real transcript tables; the reference's task-id dedup has the same
-# purpose). Keyed by (cfg hash, md5 of payload) — the cfg term matters
-# because Python workers are reused across jobs in one SparkSession: a
-# second run with different preprocessing flags / dpi / backend must
-# never be served results decoded under the first run's config
-# (code-review r3). Bounded FIFO — by entry count AND by bytes: entries
-# hold full extraction results (text + spans), and 512 multi-MB texts
-# would pin gigabytes of Python heap per worker on large-PDF corpora
-# (the flagship plan's dedup-before-decode already makes hits ~0 there).
+# purpose). The traffic it serves is streaming.stream_extraction: a
+# stream cannot join an aggregate back, so it runs this light path over
+# every turn and the cache is its only dedup (without it, a streamed
+# duplicate-heavy input measured ~7x slower). Batch callers go through
+# pipeline.build_result, whose dedup-before-decode keeps hits at ~0.
+# Keyed by (cfg hash, md5 of payload) — the cfg term matters because
+# Python workers are reused across jobs in one SparkSession: a second
+# run with different preprocessing flags / dpi / backend must never be
+# served results decoded under the first run's config (code-review r3).
+# Bounded FIFO — by entry count AND by bytes: entries hold full
+# extraction results (text + spans), and 512 multi-MB texts would pin
+# gigabytes of Python heap per worker on large-PDF corpora.
 _PDF_CACHE: dict = {}
 _PDF_CACHE_MAX = 512
 _PDF_CACHE_MAX_BYTES = 256 * 1024 * 1024

@@ -17,7 +17,9 @@ row to exercise error containment.
 from __future__ import annotations
 
 import base64
+import os
 import random
+import tempfile
 from datetime import datetime, timedelta
 
 import pyarrow as pa
@@ -231,3 +233,21 @@ def generate_transcripts(out_path: str, tier: str = "unit",
     # speedup from 1 -> 4 cores).
     pq.write_table(table, out_path, row_group_size=4096)
     return table.num_rows
+
+
+def cached_fixture(tier: str = "unit", **kw) -> str:
+    """Path of a transcripts fixture generated once per machine under
+    ``<tempdir>/pdf_ocr_spark_fixtures``. The file name carries the tier,
+    FIXTURE_VERSION and every generator argument, so a content change or
+    a different argument never reads a stale file."""
+    cache = os.path.join(tempfile.gettempdir(), "pdf_ocr_spark_fixtures")
+    os.makedirs(cache, exist_ok=True)
+    args = "".join(f"_{k}{v}" for k, v in sorted(kw.items()))
+    path = os.path.join(
+        cache, f"transcripts_{tier}_v{FIXTURE_VERSION}{args}.parquet")
+    if not os.path.exists(path):
+        # write then rename: a concurrent reader never sees a partial file
+        tmp = f"{path}.{os.getpid()}.tmp"
+        generate_transcripts(tmp, tier=tier, **kw)
+        os.replace(tmp, path)
+    return path

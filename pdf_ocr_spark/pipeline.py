@@ -55,9 +55,8 @@ from pyspark.sql.types import (
 
 from .config import DEFAULT, EngineConfig
 
-OUTPUT_SCHEMA = StructType([
-    StructField("conv_id", StringType()),
-    StructField("turn_idx", IntegerType()),
+# the result fields every extraction UDF emits (extract.RESULT_COLUMNS)
+_RESULT_FIELDS = [
     StructField("extracted_text", StringType()),
     StructField("spans", ArrayType(StructType([
         StructField("start", IntegerType()),
@@ -68,6 +67,12 @@ OUTPUT_SCHEMA = StructType([
     StructField("n_pages", IntegerType()),
     StructField("error", StringType()),
     StructField("elapsed_us", LongType()),
+]
+
+OUTPUT_SCHEMA = StructType([
+    StructField("conv_id", StringType()),
+    StructField("turn_idx", IntegerType()),
+    *_RESULT_FIELDS,
     StructField("bucket", IntegerType()),
 ])
 
@@ -98,16 +103,7 @@ PAYLOAD_SCHEMA = StructType([
     # duplication factor (VERDICT r2 #4 — was a documented overcount)
     StructField("first_conv", StringType()),
     StructField("first_turn", IntegerType()),
-    StructField("extracted_text", StringType()),
-    StructField("spans", ArrayType(StructType([
-        StructField("start", IntegerType()),
-        StructField("end", IntegerType()),
-    ]))),
-    StructField("method", StringType()),
-    StructField("confidence", DoubleType()),
-    StructField("n_pages", IntegerType()),
-    StructField("error", StringType()),
-    StructField("elapsed_us", LongType()),
+    *_RESULT_FIELDS,
 ])
 
 

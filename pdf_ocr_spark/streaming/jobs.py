@@ -4,9 +4,9 @@ The reference has no streaming (progress is polled from in-memory dicts,
 SmartPDF-OCR ``app/api/ocr.py:23-24`` — SURVEY §2.11), but a transcripts
 table at 10^12-turn scale is append-only in practice, so the engine exposes
 the same extraction as an incremental job: ``readStream`` over the input
-directory -> the identical mapInPandas extraction -> ``writeStream``
-(file sink + checkpoint). Late-data handling is demonstrated with a
-watermarked windowed aggregate over turn timestamps.
+directory -> the batch pipeline's light-path mapInPandas extraction ->
+``writeStream`` (file sink + checkpoint). Late-data handling is
+demonstrated with a watermarked windowed aggregate over turn timestamps.
 
 Batch/stream parity: the UDF and schema are shared with the batch pipeline,
 so a turn extracted incrementally is byte-identical to the batch result
@@ -34,9 +34,13 @@ def stream_extraction(
 ):
     """Incremental extraction over a growing transcripts directory.
 
-    Per micro-batch the work is identical to one batch-pipeline pass;
-    exactly-once delivery comes from the file sink + checkpoint (the
-    streaming analog of the lineage/resume design)."""
+    Each micro-batch runs the light UDF over every turn, with no bucket
+    repartition and no dedup-before-decode (a streaming aggregate cannot
+    be joined back to the stream). Duplicate payloads decode once per
+    Python worker through the per-worker payload cache
+    (extract._PDF_CACHE). Per-turn extracted text is byte-identical to
+    the batch pipeline's; exactly-once delivery comes from the file sink
+    + checkpoint (the streaming analog of the lineage/resume design)."""
     src = (spark.readStream.schema(INPUT_SCHEMA)
            .option("maxFilesPerTrigger", "8")
            .parquet(input_dir)
@@ -74,22 +78,20 @@ def conversation_state_stats(
 
     def update(key, pdfs, state):
         import pandas as pd
+
+        # the engine's own router, so the counts match extraction
+        from ..detector import KIND_HTML, KIND_PDF
+        from ..extract import route_kinds
         if state.exists:
             n_turns, n_pdf, n_html, n_chars = state.get
         else:
             n_turns = n_pdf = n_html = n_chars = 0
         for batch in pdfs:
-            texts = batch["text"].fillna("")  # NULL-safe prefix counters
+            kinds = route_kinds(batch["text"])
             n_turns += len(batch)
-            # lstrip like the engine's routing (detector.detect_payload_kind
-            # / extract.route_kinds): a '\nJVBERi...' turn extracts as pdf
-            # and must count as pdf here too (ADVICE r4)
-            stripped = texts.str.lstrip()
-            n_pdf += int(stripped.str.startswith("JVBERi").sum())
-            heads = stripped.str.slice(0, 15).str.lower()
-            n_html += int((heads.str.startswith("<!doctype html")
-                           | heads.str.startswith("<html")).sum())
-            n_chars += int(texts.str.len().sum())
+            n_pdf += int((kinds == KIND_PDF).sum())
+            n_html += int((kinds == KIND_HTML).sum())
+            n_chars += int(batch["text"].fillna("").str.len().sum())
         state.update((n_turns, n_pdf, n_html, n_chars))
         yield pd.DataFrame([{
             "conv_id": key[0], "n_turns": n_turns, "n_pdf": n_pdf,

@@ -2,30 +2,10 @@
 must stay in the plan (pushdown, broadcast, top-k) — a refactor that
 silently drops one should fail here, not in production."""
 
-import pytest
-from pyspark.sql import functions as F
-
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString() + \
         df._jdf.queryExecution().optimizedPlan().toString()
-
-
-def test_light_path_pushes_route_predicate(spark, unit_transcripts):
-    from pdf_ocr_spark.pipeline import (OUTPUT_SCHEMA, _make_extract_udf,
-                                        with_bucket)
-    from pdf_ocr_spark.config import DEFAULT
-    df = spark.read.parquet(unit_transcripts) \
-        .select("conv_id", "turn_idx", "text")
-    df = with_bucket(df, 64, 64)
-    light = df.filter(~F.col("text").startswith("JVBERi")) \
-        .mapInPandas(_make_extract_udf(DEFAULT), schema=OUTPUT_SCHEMA)
-    plan = _plan(light)
-    assert "PushedFilters" in plan
-    assert "StringStartsWith(text,JVBERi)" in plan
-    # column pruning: scan must not read role/tool/ts
-    assert "ReadSchema: struct<conv_id:string,turn_idx:int,text:string>" \
-        in plan
 
 
 def test_flagship_plan_locks(spark, unit_transcripts):
@@ -44,6 +24,8 @@ def test_flagship_plan_locks(spark, unit_transcripts):
     # light side: the never-three-valued complement is pushed too
     assert "Or(IsNull(text),Not(StringStartsWith(text,JVBERi)))" in plan
     # column pruning: no physical scan reads role/tool/ts
+    assert "ReadSchema: struct<conv_id:string,turn_idx:int,text:string>" \
+        in plan
     import re
     for rs in re.findall(r"ReadSchema: (\S+)", plan):
         assert "role" not in rs and "tool" not in rs and "ts:" not in rs

@@ -28,3 +28,14 @@ def test_extract_transcripts_query_runs(spark):
     df = entrymod.queries()["extract_transcripts"](
         spark, "/root/testdata/sf0.001")
     assert df.count() > 0
+
+
+def test_extract_transcripts_runs_flagship_plan(spark):
+    """The driver's extraction query is pipeline.build_result, not a
+    hand-built copy: the round-robin spread into the decode UDF that
+    follows dedup-before-decode is in its executed plan."""
+    df = entrymod.queries()["extract_transcripts"](
+        spark, "/root/testdata/sf0.001")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    n = max(8, spark.sparkContext.defaultParallelism)
+    assert f"RoundRobinPartitioning({n})" in plan
