@@ -95,12 +95,10 @@ def main() -> None:
         raise SystemExit(f"unknown BENCH_QUERIES entries: {unknown}")
 
     # --- headline: extraction throughput -------------------------------
-    # best-of-2 against neighbor noise on this shared host — but each
-    # trial gets a FRESH SparkSession: Python workers (and their
-    # per-worker payload dedup cache, extract._PDF_CACHE) die with the
-    # context, so trial 2 re-decodes everything and the minimum is the
-    # least-interference run, not a warm-cache run (same fresh-process
-    # methodology as jobs/scaling_bench.py).
+    # best-of-2 against neighbor noise on this shared host; each trial
+    # gets a FRESH SparkSession so neither trial inherits the other's
+    # JVM or Python workers, and the minimum is the least-interference
+    # run (same fresh-process methodology as jobs/scaling_bench.py).
     fixture = cached_fixture("bench", n_convs=n_convs)
     metrics, best_wall = None, None
     for trial in range(2):

@@ -13,8 +13,10 @@ Cluster:
 
 With --available-now (default) the job drains everything currently in
 the input and exits — the cron-friendly incremental form; exactly-once
-delivery across restarts comes from the file-sink commit log in
---checkpoint. With --continuous it keeps running on a trigger interval.
+delivery across restarts comes from the idempotent per-batch overwrite
+(a replayed micro-batch replaces its own ``batch_id=<id>`` partition of
+--output; --checkpoint records the offsets). With --continuous it keeps
+running on a trigger interval.
 
 Local (no spark-submit): runs on local[$SPARK_GRAFT_CPUS].
 """

@@ -37,66 +37,6 @@ RESULT_COLUMNS = [
     "elapsed_us",
 ]
 
-# Per-worker-process payload-dedup cache (identical attachments recur in
-# real transcript tables; the reference's task-id dedup has the same
-# purpose). The traffic it serves is streaming.stream_extraction: a
-# stream cannot join an aggregate back, so it runs this light path over
-# every turn and the cache is its only dedup (without it, a streamed
-# duplicate-heavy input measured ~7x slower). Batch callers go through
-# pipeline.build_result, whose dedup-before-decode keeps hits at ~0.
-# Keyed by (cfg hash, md5 of payload) — the cfg term matters because
-# Python workers are reused across jobs in one SparkSession: a second
-# run with different preprocessing flags / dpi / backend must never be
-# served results decoded under the first run's config (code-review r3).
-# Bounded FIFO — by entry count AND by bytes: entries hold full
-# extraction results (text + spans), and 512 multi-MB texts would pin
-# gigabytes of Python heap per worker on large-PDF corpora.
-_PDF_CACHE: dict = {}
-_PDF_CACHE_MAX = 512
-_PDF_CACHE_MAX_BYTES = 256 * 1024 * 1024
-_PDF_CACHE_BYTES = 0
-
-
-def _entry_bytes(value) -> int:
-    """Approximate heap cost of a cached result: dominated by the
-    extracted text (item 0 of the result tuple); spans/metadata are
-    proportional and covered by the 2x factor."""
-    text = value[0] if value and isinstance(value[0], str) else ""
-    return 2 * len(text) + 256
-
-
-def _pdf_cache_key(payload: str, cfg: EngineConfig) -> tuple:
-    """One md5 pass per lookup (the digest is reused for the put on a
-    miss); EngineConfig is a frozen dataclass, so hash(cfg) is stable
-    within the worker process."""
-    import hashlib
-    return (hash(cfg), hashlib.md5(payload.encode()).digest())
-
-
-def _pdf_cache_get(key: tuple, counters: dict | None = None):
-    """Cache lookup; ``counters`` is an optional dict of Spark
-    accumulators ("cache_hits"/"cache_misses") so bench/lineage can
-    attribute throughput to cold decodes vs warm hits (VERDICT r2 #7)."""
-    hit = _PDF_CACHE.get(key)
-    if counters is not None:
-        counters["cache_hits" if hit is not None else "cache_misses"] \
-            .add(1)
-    return hit
-
-
-def _pdf_cache_put(key: tuple, value) -> None:
-    global _PDF_CACHE_BYTES
-    nb = _entry_bytes(value)
-    if nb > _PDF_CACHE_MAX_BYTES:
-        return  # a single oversized result must not evict everything
-    while _PDF_CACHE and (len(_PDF_CACHE) >= _PDF_CACHE_MAX
-                          or _PDF_CACHE_BYTES + nb
-                          > _PDF_CACHE_MAX_BYTES):
-        old = _PDF_CACHE.pop(next(iter(_PDF_CACHE)))  # FIFO evict
-        _PDF_CACHE_BYTES -= _entry_bytes(old)
-    _PDF_CACHE[key] = value
-    _PDF_CACHE_BYTES += nb
-
 
 def _spans(paragraphs: list, sep_len: int = 2) -> list:
     out = []
@@ -259,13 +199,12 @@ def _extract_pdf_doc_inner(text: str, cfg: EngineConfig) -> tuple:
             info.page_count, None)
 
 
-def extract_payload_batch(texts: pd.Series, cfg: EngineConfig = DEFAULT,
-                          counters: dict | None = None) -> pd.DataFrame:
+def extract_payload_batch(texts: pd.Series,
+                          cfg: EngineConfig = DEFAULT) -> pd.DataFrame:
     """Extract a batch of *distinct PDF payloads* (the dedup-before-decode
     pre-pass): one decode per unique payload cluster-wide. Returns the same
     RESULT_COLUMNS frame as extract_batch, whose PDF turns also go
-    through here, so the two stages cannot drift on cache keying or
-    result shape."""
+    through here, so the two stages cannot drift on result shape."""
     n = len(texts)
     out = {c: np.empty(n, dtype=object) for c in
            ("extracted_text", "spans", "method", "error")}
@@ -275,14 +214,9 @@ def extract_payload_batch(texts: pd.Series, cfg: EngineConfig = DEFAULT,
     vals = texts.to_numpy(dtype=object)
     for i in range(n):
         t0 = time.perf_counter_ns()
-        key = _pdf_cache_key(vals[i], cfg)
-        hit = _pdf_cache_get(key, counters)
-        if hit is None:
-            hit = _extract_pdf_doc(vals[i], cfg)
-            _pdf_cache_put(key, hit)
-        text, spans, method, c, n_pages, err = hit
+        text, spans, method, c, n_pages, err = _extract_pdf_doc(vals[i], cfg)
         out["extracted_text"][i] = text
-        out["spans"][i] = list(spans)
+        out["spans"][i] = spans
         out["method"][i] = method
         out["error"][i] = err
         conf[i] = c
@@ -295,8 +229,8 @@ def extract_payload_batch(texts: pd.Series, cfg: EngineConfig = DEFAULT,
     }, index=texts.index)
 
 
-def extract_batch(texts: pd.Series, cfg: EngineConfig = DEFAULT,
-                  counters: dict | None = None) -> pd.DataFrame:
+def extract_batch(texts: pd.Series,
+                  cfg: EngineConfig = DEFAULT) -> pd.DataFrame:
     """Extract a batch of turn payloads -> result frame (RESULT_COLUMNS)."""
     n = len(texts)
     kinds = route_kinds(texts)
@@ -361,7 +295,7 @@ def extract_batch(texts: pd.Series, cfg: EngineConfig = DEFAULT,
 
     pdf_idx = np.nonzero(kind_arr == "pdf_b64")[0]
     if len(pdf_idx):
-        res = extract_payload_batch(texts.iloc[pdf_idx], cfg, counters)
+        res = extract_payload_batch(texts.iloc[pdf_idx], cfg)
         for col, arr in zip(RESULT_COLUMNS, (
                 out_text, out_spans, out_method, out_conf, out_pages,
                 out_err, out_us)):

@@ -107,11 +107,11 @@ PAYLOAD_SCHEMA = StructType([
 ])
 
 
-def _make_extract_udf(cfg: EngineConfig, counters: dict | None = None):
+def _make_extract_udf(cfg: EngineConfig):
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .extract import extract_batch  # executor-side import
         for pdf_batch in batches:
-            res = extract_batch(pdf_batch["text"], cfg, counters=counters)
+            res = extract_batch(pdf_batch["text"], cfg)
             res.insert(0, "turn_idx", pdf_batch["turn_idx"].values)
             res.insert(0, "conv_id", pdf_batch["conv_id"].values)
             res["bucket"] = pdf_batch["bucket"].values
@@ -119,12 +119,11 @@ def _make_extract_udf(cfg: EngineConfig, counters: dict | None = None):
     return extract
 
 
-def _make_payload_udf(cfg: EngineConfig, counters: dict | None = None):
+def _make_payload_udf(cfg: EngineConfig):
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .extract import extract_payload_batch
         for batch in batches:
-            res = extract_payload_batch(batch["text"], cfg,
-                                        counters=counters)
+            res = extract_payload_batch(batch["text"], cfg)
             res.insert(0, "first_turn", batch["first_turn"].values)
             res.insert(0, "first_conv", batch["first_conv"].values)
             res.insert(0, "ph", batch["ph"].values)
@@ -149,8 +148,7 @@ def with_bucket(df: DataFrame, num_buckets: int,
 
 
 def build_result(df: DataFrame, cfg: EngineConfig,
-                 num_partitions: int,
-                 counters: dict | None = None) -> DataFrame:
+                 num_partitions: int) -> DataFrame:
     """Build the extraction result frame (the flagship logical plan).
 
     # --- dedup-before-decode pre-pass -------------------------------------
@@ -191,7 +189,7 @@ def build_result(df: DataFrame, cfg: EngineConfig,
     # buys nothing; the single post-union repartition below colocates
     # buckets and restores deterministic ordering over the (much smaller)
     # extracted output.
-    light_result = light.mapInPandas(_make_extract_udf(cfg, counters),
+    light_result = light.mapInPandas(_make_extract_udf(cfg),
                                      schema=OUTPUT_SCHEMA)
 
     # Round-robin repartition, NOT hash(ph): a hash exchange on ph is
@@ -227,7 +225,7 @@ def build_result(df: DataFrame, cfg: EngineConfig,
         .repartition(max(num_partitions,
                          df.sparkSession.sparkContext.defaultParallelism)))
     payload_results = distinct_payloads.mapInPandas(
-        _make_payload_udf(cfg, counters), schema=PAYLOAD_SCHEMA)
+        _make_payload_udf(cfg), schema=PAYLOAD_SCHEMA)
     pdf_result = (
         pdf_turns.select("conv_id", "turn_idx", "bucket", "ph")
         .join(payload_results, "ph")
@@ -391,20 +389,10 @@ def run_extraction(
             "skipped_buckets": len(done),
             "wall_time_s": time.time() - t0, "write_phase_s": 0.0,
             "bookkeeping_s": 0.0, "turns_per_sec": 0.0,
-            "payload_cache_hits": 0, "payload_cache_misses": 0,
             "rows_enriched": 0,
         }
 
-    # per-worker payload-cache observability (VERDICT r2 #7): accumulators
-    # make the dedup-before-decode claim auditable — with the distinct
-    # pre-pass, payload-cache hits should be ~0 in the heavy path (each
-    # distinct payload decodes once cluster-wide) and only light-path
-    # duplicate PDFs (none by construction: PDFs route heavy) hit it.
-    counters = {
-        "cache_hits": spark.sparkContext.accumulator(0),
-        "cache_misses": spark.sparkContext.accumulator(0),
-    }
-    result = build_result(df, cfg, num_partitions, counters=counters)
+    result = build_result(df, cfg, num_partitions)
 
     # data write first (idempotent per bucket: Iceberg overwritePartitions
     # or parquet dynamic partition overwrite — catalog.py) ...
@@ -473,10 +461,6 @@ def run_extraction(
         "write_phase_s": write_phase_s,
         "bookkeeping_s": time.time() - t0 - wall,
         "turns_per_sec": n_out / wall if wall > 0 else 0.0,
-        # per-worker payload-cache observability: hits should stay ~0 in
-        # the flagship plan (dedup-before-decode already uniquifies)
-        "payload_cache_hits": counters["cache_hits"].value,
-        "payload_cache_misses": counters["cache_misses"].value,
         "rows_enriched": n_enriched,
     }
 

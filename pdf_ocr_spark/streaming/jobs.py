@@ -4,21 +4,23 @@ The reference has no streaming (progress is polled from in-memory dicts,
 SmartPDF-OCR ``app/api/ocr.py:23-24`` — SURVEY §2.11), but a transcripts
 table at 10^12-turn scale is append-only in practice, so the engine exposes
 the same extraction as an incremental job: ``readStream`` over the input
-directory -> the batch pipeline's light-path mapInPandas extraction ->
-``writeStream`` (file sink + checkpoint). Late-data handling is
-demonstrated with a watermarked windowed aggregate over turn timestamps.
+directory -> ``foreachBatch``, where each micro-batch runs the batch
+pipeline's plan (``pipeline.build_result``) and overwrites its own
+``batch_id`` partition. Late-data handling is demonstrated with a
+watermarked windowed aggregate over turn timestamps.
 
-Batch/stream parity: the UDF and schema are shared with the batch pipeline,
-so a turn extracted incrementally is byte-identical to the batch result
-(tested in tests/test_streaming.py).
+Batch/stream parity: a micro-batch is a static DataFrame run through the
+same plan as ``run_extraction``, so a turn extracted incrementally is
+byte-identical to the batch result (tested in tests/test_streaming.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..catalog import overwrite_partitions
 from ..config import DEFAULT, EngineConfig
-from ..pipeline import OUTPUT_SCHEMA, _make_extract_udf, with_bucket
+from ..pipeline import build_result, with_bucket
 
 INPUT_SCHEMA = ("conv_id string, turn_idx int, role string, text string, "
                 "tool string, ts timestamp")
@@ -34,24 +36,27 @@ def stream_extraction(
 ):
     """Incremental extraction over a growing transcripts directory.
 
-    Each micro-batch runs the light UDF over every turn, with no bucket
-    repartition and no dedup-before-decode (a streaming aggregate cannot
-    be joined back to the stream). Duplicate payloads decode once per
-    Python worker through the per-worker payload cache
-    (extract._PDF_CACHE). Per-turn extracted text is byte-identical to
-    the batch pipeline's; exactly-once delivery comes from the file sink
-    + checkpoint (the streaming analog of the lineage/resume design)."""
+    Each micro-batch goes through the flagship plan (``build_result``:
+    dedup-before-decode, so a payload repeated within the micro-batch
+    decodes once) and is written to ``output_dir/batch_id=<id>`` with a
+    dynamic partition overwrite. Exactly-once delivery comes from that
+    overwrite: a batch replayed after a crash between its write and its
+    checkpoint commit has the same id and the same offsets, so it
+    replaces its own partition instead of appending a second copy."""
+    num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    def write_batch(batch: DataFrame, batch_id: int) -> None:
+        df = with_bucket(batch, cfg.num_buckets, cfg.salt_turns_per_group)
+        result = build_result(df, cfg, num_partitions)
+        overwrite_partitions(result.withColumn("batch_id", F.lit(batch_id)),
+                             output_dir, "batch_id")
+
     src = (spark.readStream.schema(INPUT_SCHEMA)
            .option("maxFilesPerTrigger", "8")
            .parquet(input_dir)
            .select("conv_id", "turn_idx", "text"))
-    src = with_bucket(src, cfg.num_buckets, cfg.salt_turns_per_group)
-    result = src.mapInPandas(_make_extract_udf(cfg), schema=OUTPUT_SCHEMA)
-    writer = (result.writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
+    writer = (src.writeStream.foreachBatch(write_batch)
+              .option("checkpointLocation", checkpoint_dir))
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()

@@ -70,9 +70,9 @@ def test_spark_substring_agrees_with_python_spans(spark):
 
 
 def test_payload_cache_is_config_keyed():
-    """A reused worker must never serve results decoded under a
-    different EngineConfig (code-review r3): the same payload with a
-    config that flips its routing must re-extract, not cache-hit."""
+    """A second EngineConfig must re-extract (code-review r3): the same
+    payload under a config that flips its routing must not return the
+    result decoded under the first config."""
     import random
     import pandas as pd
     from pdf_ocr_spark.config import EngineConfig

