@@ -90,6 +90,8 @@ def _tuned_conf(b):
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
+        # progress bars on stderr break a script's final JSON line
+        .config("spark.ui.showConsoleProgress", "false")
     )
 
 
@@ -123,6 +125,11 @@ def package_zip(out_dir: str | None = None) -> str:
 
 
 def ship_package(spark: SparkSession) -> None:
-    """Make the package importable on executors regardless of cwd —
-    the programmatic equivalent of spark-submit --py-files."""
+    """Ship the package zip to executors — the programmatic equivalent
+    of spark-submit --py-files.
+
+    In local mode a ``pdf_ocr_spark/`` directory in the driver's working
+    directory shadows the zip: PySpark's Python workers import from the
+    cwd first, so they can run another checkout's code than the driver.
+    Run from the checkout being measured."""
     spark.sparkContext.addPyFile(package_zip())

@@ -72,22 +72,18 @@ def test_decode_cost_attributed_once_per_payload(
     assert res.filter("elapsed_us > 0").count() == 6
 
 
-def test_lineage_status_derives_from_row_balance(spark):
+def test_lineage_status_derives_from_row_balance():
     """A bucket that lost rows must be 'incomplete' (ADVICE r2): the loss
     signal triggers reprocessing instead of being locked in."""
-    written = spark.createDataFrame(
-        [(0, "plain", 1, 100), (0, "plain", 1, 50), (1, "ocr", 3, 2000)],
-        "bucket int, method string, n_pages int, elapsed_us long")
-    in_counts = spark.createDataFrame(
-        [(0, 2), (1, 5), (2, 4)], "bucket int, rows_in long")
+    rows_in = {0: 2, 1: 5, 2: 4}
+    written = {0: (2, 0, 0.00015), 1: (1, 3, 0.002)}
     rows = {r["bucket"]: r for r in build_lineage(
-        written, in_counts, "r1", "snap", "2026-01-01T00:00:00Z")
-        .collect()}
+        rows_in, written, "r1", "snap", "2026-01-01T00:00:00Z", 64, 64)}
     assert rows[0]["status"] == "completed"
     assert rows[0]["rows_in"] == 2 and rows[0]["rows_out"] == 2
-    # bucket 1 lost 3 of 5 rows -> incomplete
+    # bucket 1 lost 4 of 5 rows -> incomplete
     assert rows[1]["status"] == "incomplete"
-    # bucket 2 lost ALL rows: full-outer join still emits it, incomplete
+    # bucket 2 lost ALL rows: still gets a row, incomplete
     assert rows[2]["status"] == "incomplete"
     assert rows[2]["rows_out"] == 0 and rows[2]["rows_in"] == 4
 
@@ -97,14 +93,15 @@ def test_incomplete_buckets_are_reprocessed_on_resume(spark, tmp_path):
     lineage row (data loss) leaves its bucket eligible for reprocessing."""
     lin_path = str(tmp_path / "lineage")
     spark.createDataFrame(
-        [("r1", "snap", 0, 5, 5, 0, 0.1, "completed", "t1"),
-         ("r1", "snap", 1, 5, 3, 0, 0.1, "incomplete", "t1"),
-         ("r1", "other-snap", 2, 5, 5, 0, 0.1, "completed", "t1")],
+        [("r1", "snap", 0, 5, 5, 0, 0.1, "completed", "t1", 8, 64),
+         ("r1", "snap", 1, 5, 3, 0, 0.1, "incomplete", "t1", 8, 64),
+         ("r1", "other-snap", 2, 5, 5, 0, 0.1, "completed", "t1", 8, 64)],
         "run_id string, input_snapshot_id string, bucket int, "
         "rows_in long, rows_out long, ocr_page_count long, "
-        "wall_time_s double, status string, updated_at string"
+        "wall_time_s double, status string, updated_at string, "
+        "num_buckets int, salt_turns int"
     ).write.parquet(lin_path)
-    assert completed_buckets(spark, lin_path, "snap") == {0}
+    assert completed_buckets(spark, lin_path, "snap", 8, 64) == {0}
 
 
 def test_enrich_post_stage_composes_with_pipeline(
@@ -205,4 +202,47 @@ def test_resume_distrusts_other_bucketing_config(spark, tmp_path):
     legacy.write.parquet(legacy_path)
     assert completed_buckets(spark, legacy_path, "snap",
                              num_buckets=8, salt_turns=64) == set()
-    assert len(completed_buckets(spark, legacy_path, "snap")) > 0
+
+
+def test_crash_before_lineage_append_resumes_to_clean_output(
+        spark, unit_transcripts, tmp_path, monkeypatch):
+    """A run that dies between the data write and the lineage append
+    leaves written buckets with no lineage; the resumed run must rewrite
+    them in place (no duplicate turns) and commit balanced lineage."""
+    import os
+
+    import pdf_ocr_spark.catalog as catalog
+    n_in = pq.read_table(unit_transcripts).num_rows
+    key = ["conv_id", "turn_idx"]
+    cols = key + ["extracted_text", "spans"]
+    kw = dict(input_snapshot_id="snap", num_buckets=8, num_partitions=8)
+
+    clean_out = str(tmp_path / "clean")
+    run_extraction(spark, unit_transcripts, clean_out,
+                   str(tmp_path / "clean_lin"), run_id="clean",
+                   resume=False, **kw)
+    clean = spark.read.parquet(clean_out).select(cols)
+
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+
+    def crash(df, target):
+        raise RuntimeError("driver died before the lineage append")
+
+    monkeypatch.setattr(catalog, "append", crash)
+    with pytest.raises(RuntimeError, match="lineage append"):
+        run_extraction(spark, unit_transcripts, out, lin, run_id="dies",
+                       resume=True, **kw)
+    assert spark.read.parquet(out).count() > 0
+    assert not os.path.exists(lin)
+
+    monkeypatch.undo()
+    m = run_extraction(spark, unit_transcripts, out, lin, run_id="resumed",
+                       resume=True, **kw)
+    got = spark.read.parquet(out).select(cols)
+    assert got.count() == got.select(key).distinct().count() == n_in
+    assert got.exceptAll(clean).count() == 0
+    assert clean.exceptAll(got).count() == 0
+    rows = spark.read.parquet(lin).collect()
+    assert all(r["status"] == "completed" and r["rows_in"] == r["rows_out"]
+               for r in rows)
+    assert sum(r["rows_in"] for r in rows) == m["rows_out"] == n_in

@@ -77,6 +77,10 @@ def test_lineage_rows(spark, run_paths):
     assert any(r["ocr_page_count"] > 0 for r in lin)
     listing = history_listing(spark, run_paths["lin"]).collect()
     assert len(listing) == len({r["bucket"] for r in lin})
+    # one run's lineage is appended as one data file
+    import glob
+    import os
+    assert len(glob.glob(os.path.join(run_paths["lin"], "*.parquet"))) == 1
 
 
 def test_lineage_rows_in_is_honest(spark, unit_transcripts, run_paths):
