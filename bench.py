@@ -242,6 +242,9 @@ def main() -> None:
         },
         "composed_dedup_extracted": composed,
         "composed_timed_out": timed_out,
+        # the host's 1-minute load exceeded half the cores at the start:
+        # the timings are not comparable with a quiet window's
+        "contended": load_start[0] > cpus / 2,
         "host_loadavg": {
             "start_1m": round(load_start[0], 2),
             "end_1m": round(os.getloadavg()[0], 2),

@@ -99,15 +99,9 @@ def main() -> None:
                          "maxPartitionBytes) and the cluster size defines "
                          "only the parallelism; holding partitions-per-"
                          "core constant instead charges the 4N level 4x "
-                         "the fixed per-task Python worker setup: "
-                         "~0.2-0.3 core-s a task, because PySpark's "
-                         "worker_util.setup_spark_files calls "
-                         "importlib.invalidate_caches() on every task and "
-                         "CPython 3.11/3.12 then re-reads the central "
-                         "directory of each of the 16 zipimporters cached "
-                         "for pyspark.zip, py4j and the spark-core jar "
-                         "(130-160 ms uncontended). The cost is the same "
-                         "on a cluster. The decode stage runs "
+                         "the fixed per-task Python worker setup. The "
+                         "cost is the same on a cluster. The decode "
+                         "stage runs "
                          "max(parts, cores) tasks: default 8 gives 8 at "
                          "both levels while 4N <= 8")
     ap.add_argument("--pool", type=int, default=1024,
@@ -163,15 +157,16 @@ cluster size defines only the parallelism).
 - Both levels run the IDENTICAL plan. The decode stage runs one task
   per partition, never fewer than the cores: {max(args.parts, args.n)}
   tasks at N and {max(args.parts, args.n * 4)} at 4N. Each Python task
-  pays a fixed worker setup of ~0.2-0.3 core-s: PySpark's
-  worker_util.setup_spark_files calls importlib.invalidate_caches() on
-  every task, and on CPython 3.11/3.12 each of the 16 zipimporters
-  cached for pyspark.zip, the py4j zip and the spark-core jar re-reads
-  its archive's central directory (130-160 ms uncontended). It
-  reproduces with a trivial mapInPandas or RDD mapPartitions and exists
-  on a cluster too. The work outside the decode stage (session-side
-  planning, pre-scan, write, lineage) does not shrink with cores, so it
-  bounds the ratio (Amdahl's law).
+  pays a fixed worker setup: PySpark's worker_util.setup_spark_files
+  calls importlib.invalidate_caches() on every task, and on CPython
+  3.11/3.12 each of the 16 zipimporters cached for pyspark.zip, the
+  py4j zip and the spark-core jar re-reads its archive's central
+  directory (130-340 ms a task). The flagship UDFs call
+  session.skip_archive_rescans, so only a worker's first task pays that
+  re-read; the rest of the setup exists on a cluster too. The work
+  outside the decode stage (session-side planning, pre-scan, write,
+  lineage) does not shrink with cores, so it bounds the ratio (Amdahl's
+  law).
 - Platform per-core capacity is flat to 8 concurrent workers on this
   box (single-thread numpy probe: 23.8/26.0/27.8/26.3 it/s per task at
   1/2/4/8 concurrent — no turbo or DRAM penalty in this range),

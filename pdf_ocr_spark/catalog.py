@@ -18,6 +18,7 @@ Append (lineage) maps to write.mode("append") / writeTo(t).append().
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def is_table_identifier(target: str) -> bool:
@@ -25,10 +26,15 @@ def is_table_identifier(target: str) -> bool:
         not target.startswith(("file:", "hdfs:", "s3:", "s3a:"))
 
 
-def load_table(spark: SparkSession, target: str) -> DataFrame:
+def load_table(spark: SparkSession, target: str,
+               schema: StructType | None = None) -> DataFrame:
+    """Read ``target``. For a path, a given ``schema`` replaces Spark's
+    schema inference, a job that reads parquet footers; a catalog table
+    carries its own schema, so ``schema`` is ignored there."""
     if is_table_identifier(target):
         return spark.read.table(target)
-    return spark.read.parquet(target)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(target)
 
 
 def overwrite_partitions(df: DataFrame, target: str,

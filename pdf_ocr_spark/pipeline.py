@@ -21,10 +21,11 @@ master URL):
     into the decode stage; light turns extract in their scan partitions;
     the final repartition by bucket moves extracted output only.
   * decode tasks: one per shuffle partition, never fewer than the
-    session's cores (defaultParallelism). Each Python task pays a fixed
-    ~0.2-0.3 core-s of PySpark worker setup before the UDF runs, so
-    splitting the stage finer costs more setup than the straggler tail
-    it would trim.
+    session's cores (defaultParallelism). Python tasks pay a fixed
+    PySpark worker setup before the UDF runs (skip_archive_rescans in
+    session.py takes the largest part out of every task after a worker's
+    first), so splitting the stage finer costs more setup than the
+    straggler tail it would trim.
   * skew: a conversation with 10^6 turns is split across buckets by the
     turn_idx//K salt term; a single fat PDF is bounded by the Arrow batch
     cap (arrow.maxRecordsPerBatch) so a batch holds at most that many
@@ -36,7 +37,9 @@ master URL):
     appended AFTER the data write commits, mirroring the reference's
     status-last meta ordering (app/api/ocr.py:284-306). In production both
     tables are Iceberg and the data write is overwritePartitions();
-    parquet dynamic partition overwrite emulates exactly that here.
+    parquet dynamic partition overwrite emulates exactly that here. The
+    output is read back with OUTPUT_SCHEMA, so no job infers its schema,
+    and its <= num_buckets bucket directories are listed on the driver.
 """
 
 from __future__ import annotations
@@ -108,6 +111,8 @@ PAYLOAD_SCHEMA = StructType([
 
 def _make_extract_udf(cfg: EngineConfig):
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from .session import skip_archive_rescans
+        skip_archive_rescans()
         from .extract import extract_batch  # executor-side import
         for pdf_batch in batches:
             res = extract_batch(pdf_batch["text"], cfg)
@@ -120,6 +125,8 @@ def _make_extract_udf(cfg: EngineConfig):
 
 def _make_payload_udf(cfg: EngineConfig):
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from .session import skip_archive_rescans
+        skip_archive_rescans()
         from .extract import extract_payload_batch
         for batch in batches:
             res = extract_payload_batch(batch["text"], cfg)
@@ -198,14 +205,15 @@ def build_result(df: DataFrame, cfg: EngineConfig,
     # cannot see UDF CPU cost; an explicit round-robin repartition(n) is
     # preserved and spreads expensive decodes evenly.
     # One decode task per shuffle partition, and at least one per session
-    # core. Every Python task pays ~0.2-0.3 core-s before the UDF runs:
+    # core. Every Python task pays a fixed setup before the UDF runs:
     # PySpark's worker calls importlib.invalidate_caches() in
     # worker_util.setup_spark_files on every task, and on CPython 3.11/3.12
     # each of the 16 zipimporters cached for pyspark.zip, the py4j zip and
     # the spark-core jar (all on the worker PYTHONPATH) eagerly re-reads
-    # its archive's central directory: 130-160 ms a task uncontended,
-    # 222 ms median in reused workers. More, smaller tasks only multiply
-    # that fixed cost: at local[4] with 4x tasks, 3.5-4.3 of the 5.9-6.7
+    # its archive's central directory: 130-340 ms a task. The UDF bodies
+    # call session.skip_archive_rescans, so only a worker's first task
+    # pays that re-read; the rest of the setup stays. More, smaller tasks
+    # still multiply it: at local[4] with 4x tasks, 3.5-4.3 of the 5.9-6.7
     # decode executor-s went before UDF entry.
     #
     # The aggregation replaces dropDuplicates(ph) at identical shuffle
@@ -297,9 +305,12 @@ def completed_buckets(spark: SparkSession, lineage_path: str,
             not _path_exists(spark, lineage_path):
         return set()
     try:
-        lin = load_table(spark, lineage_path)
+        # a path is read with LINEAGE_SCHEMA (no inference job): legacy
+        # files read the config columns as null, which match nothing
+        lin = load_table(spark, lineage_path, LINEAGE_SCHEMA)
     except Exception:
         return set()
+    # a catalog table keeps its own schema, which may lack them
     if not {"num_buckets", "salt_turns"} <= set(lin.columns):
         return set()
     cond = (F.col("status") == "completed") \
@@ -369,11 +380,9 @@ def run_extraction(
     rows_in = {r["bucket"]: r["count"]
                for r in df.groupBy("bucket").count().collect()}
 
-    # nothing to process (empty input, or every bucket already done
-    # against a fresh/cleared output path): writing an empty frame to a
-    # fresh output dir leaves no parquet data files and the lineage
-    # read-back below cannot infer a schema — return zeroed metrics
-    # instead of crashing after the (no-op) write (code-review r3)
+    # nothing to process (empty input, or every bucket already done):
+    # return zeroed metrics before planning a write of an empty frame, a
+    # read-back and a lineage append that would all record nothing
     if not rows_in:
         return {
             "run_id": run_id, "rows_out": 0,
@@ -397,8 +406,12 @@ def run_extraction(
     # would still attribute partitions left by OTHER runs — a different
     # snapshot, or an older bucketing config — to this run's
     # lineage/metrics/enrichment. Column pruning keeps the scan to the
-    # light columns.
-    written = load_table(spark, output_path) \
+    # light columns. Read with the schema just written: no inference job,
+    # and the bucket directories are listed on the driver
+    # (session._tuned_conf). The root read plus the partition filter, not
+    # explicit bucket paths: a bucket whose rows were all lost has no
+    # directory, and must still yield its rows_out = 0 lineage row.
+    written = load_table(spark, output_path, OUTPUT_SCHEMA) \
         .filter(F.col("bucket").isin(sorted(rows_in)))
     out_stats = {
         r["bucket"]: (r["rows_out"], r["ocr_page_count"], r["wall_time_s"])
@@ -478,7 +491,7 @@ def history_listing(spark: SparkSession, lineage_path: str) -> DataFrame:
     """Reference history listing analog (app/api/history.py:31-69):
     latest status per bucket, newest first."""
     from .catalog import load_table
-    lin = load_table(spark, lineage_path)
+    lin = load_table(spark, lineage_path, LINEAGE_SCHEMA)
     from pyspark.sql.window import Window
     w = Window.partitionBy("bucket").orderBy(F.desc("updated_at"))
     return (

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -87,6 +89,14 @@ def _tuned_conf(b):
         # parquet dynamic partition overwrite = Iceberg overwritePartitions
         # stand-in for idempotent per-bucket resume
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # list partition directories on the driver, not in a Spark job:
+        # above the default threshold of 32 paths every listing is a
+        # one-task-per-directory job. run_extraction's parquet read-back
+        # lists <= num_buckets bucket directories (an Iceberg table lists
+        # nothing), so pin the threshold above any bucket count the
+        # engine reads back
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "1024")
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
@@ -133,3 +143,40 @@ def ship_package(spark: SparkSession) -> None:
     cwd first, so they can run another checkout's code than the driver.
     Run from the checkout being measured."""
     spark.sparkContext.addPyFile(package_zip())
+
+
+def _keep_archive_directory() -> None:
+    """``zipimporter.invalidate_caches`` replacement: keep the archive
+    directory read at import time."""
+
+
+def skip_archive_rescans(files_root: str | None = None) -> None:
+    """Stop ``importlib.invalidate_caches()`` from re-reading the zip
+    archives this Python worker did not receive as Spark files.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` before every
+    task (``worker_util.setup_spark_files``). Before CPython 3.13 each
+    cached ``zipimporter`` then eagerly re-reads its archive's central
+    directory: pyspark.zip through one importer per package path inside
+    it, plus the py4j zip and the spark-core jar, 130-340 ms a task.
+    Those archives belong to the Spark install and do not change while
+    the worker lives. Archives under ``files_root`` (default: the
+    SparkFiles root, where addPyFile and --py-files land) keep their
+    refresh. Matching by location, not by name: workers import PySpark
+    from the Spark install, not from site-packages.
+
+    Call it at the top of a UDF body. It is idempotent, and the worker
+    stays patched for its whole life, so every later task on it skips
+    the re-read, whatever its UDF."""
+    if sys.version_info >= (3, 13):
+        return
+    if files_root is None:
+        from pyspark import SparkFiles
+        files_root = SparkFiles.getRootDirectory()
+    root = os.path.realpath(files_root)
+    for importer in list(sys.path_importer_cache.values()):
+        if not isinstance(importer, zipimport.zipimporter):
+            continue
+        archive = os.path.realpath(importer.archive)
+        if os.path.commonpath([archive, root]) != root:
+            importer.invalidate_caches = _keep_archive_directory

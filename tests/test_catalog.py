@@ -82,3 +82,36 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql("DROP TABLE IF EXISTS t_buck_a")
         spark.sql("DROP TABLE IF EXISTS t_buck_b")
+
+
+def test_schema_read_back_starts_no_spark_job(spark, tmp_path):
+    """run_extraction's read-back shape: with the schema given, nothing
+    infers it, and 40 bucket directories (above Spark's default
+    parallel-discovery threshold of 32) are listed on the driver, so
+    building the frame starts no Spark job."""
+    from pyspark.sql import functions as F
+
+    from pdf_ocr_spark.pipeline import OUTPUT_SCHEMA
+
+    rows = [(f"c{i}", i, f"text {i}", [(0, 4)], "plain", 1.0, 0, None,
+             7 * i, i % 40) for i in range(80)]
+    path = str(tmp_path / "out")
+    overwrite_partitions(spark.createDataFrame(rows, OUTPUT_SCHEMA), path)
+    keep = list(range(0, 40, 3))
+
+    sc = spark.sparkContext
+    group = "schema-read-back"
+    sc.setJobGroup(group, "read-back with a given schema")
+    try:
+        read_back = load_table(spark, path, OUTPUT_SCHEMA) \
+            .filter(F.col("bucket").isin(keep))
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+
+    inferred = load_table(spark, path).filter(F.col("bucket").isin(keep))
+    assert read_back.columns == inferred.columns
+    assert sorted(read_back.collect()) == sorted(inferred.collect())
+    assert read_back.count() == 2 * len(keep)
